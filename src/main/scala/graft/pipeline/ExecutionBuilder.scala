@@ -184,28 +184,12 @@ final class ExecutionBuilder[R] private (
    * zero results, rather than throwing.
    */
   def run(maxIdleMs: Long = 0L): ExecutionResult[R] = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration._
-    val arr: Array[Env[R]] =
-      if (maxIdleMs <= 0) env.collect()
-      else {
-        val sc = spark.sparkContext
-        val group = s"graft-exec-${java.util.UUID.randomUUID()}"
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val fut = Future {
-          sc.setJobGroup(group, "graft execution", interruptOnCancel = true)
-          try env.collect() finally sc.clearJobGroup()
-        }
-        try Await.result(fut, maxIdleMs.millis)
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            sc.cancelJobGroup(group)
-            return ExecutionResult(Seq.empty, Seq("execution max idle reached"))
-        }
-      }
-    val results = arr.iterator.flatMap(_.value).toSeq
-    val errors = arr.iterator.flatMap(_.error).toSeq
-    ExecutionResult(results, errors)
+    val arr =
+      if (maxIdleMs <= 0) Some(env.collect())
+      else Remote.inJobGroup(spark.sparkContext, "graft-exec", maxIdleMs)(env.collect())
+    arr.fold(ExecutionResult[R](Seq.empty, Seq("execution max idle reached"))) { a =>
+      ExecutionResult(a.iterator.flatMap(_.value).toSeq, a.iterator.flatMap(_.error).toSeq)
+    }
   }
 
   /** Results channel as a typed Dataset (for composing with the relational surface). */

@@ -163,6 +163,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(r.errors === Seq("execution max idle reached"))
   }
 
+  test("a run after a max-idle timeout completes in full (no cancelled job group leaks)") {
+    val timedOut = ExecutionBuilder.seqReader(spark, (1 to 8).map(_.toLong), parts = 2)
+      .map { k => Thread.sleep(5000); k }
+      .run(maxIdleMs = 300)
+    assert(timedOut.errors === Seq("execution max idle reached"))
+    val r = ExecutionBuilder.seqReader(spark, (1 to 32).map(_.toLong), parts = 4)
+      .map(_ * 3)
+      .run()
+    assert(r.errors.isEmpty)
+    assert(r.results.sorted === (1 to 32).map(_ * 3L))
+  }
+
   test("erroring reader: per-record errors, execution completes (test_errors.py reader case)") {
     val reader = new Reader[Long] {
       def numPartitions = 2
