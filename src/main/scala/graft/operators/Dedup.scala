@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
 import graft.core.Materialize.MaterializeOps
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -1233,27 +1234,18 @@ object Dedup {
    * neighbors to m = min(N(u) ∪ {u}). Shrinks tall trees toward
    * their minimum without ever pointing a smaller node at a larger
    * one (monotone — labels only decrease).
+   *
+   * Both star rounds gate their node-sized min-label table on
+   * measured size: the loop's checksum observe carries the exact edge
+   * count E of the round's input, and the broadcast sides are bounded
+   * by it — largeStar's min-label table has one row per NODE (≤ 2·E),
+   * smallStar's one row per distinct oriented edge head of its input
+   * (≤ E rows: largeStar emits at most one row per unordered input
+   * pair). Each call site gates its own bound against
+   * [[graft.core.Fixpoint.broadcastMaxRows]], so the built relation
+   * never exceeds ~3-4× 16 B × threshold; above it (the billion-edge
+   * regime) the shuffled join stands.
    */
-  /** Measured-size broadcast gate for the star rounds' node-sized
-    * min-label tables: the loop's checksum observe carries the exact
-    * edge count E of the round's input, and the broadcast sides are
-    * bounded by it — largeStar's min-label table has one row per
-    * NODE (≤ 2·E), smallStar's one row per distinct oriented edge
-    * head of its input (≤ E rows: largeStar emits at most one row
-    * per unordered input pair). Each call site gates its own bound
-    * against the threshold, so the built relation never exceeds
-    * ~3-4× 16 B × threshold ⇒ the 2M default is 100-200 MB of
-    * driver/executor memory; above it (the billion-edge regime) the
-    * shuffled join stands. Operator-neutral key
-    * `spark.graft.broadcastNodes`, with the historical
-    * `spark.graft.cc.broadcastNodes` honored as a fallback. */
-  private def ccBroadcastMax(df: DataFrame): Long = {
-    val conf = df.sparkSession.conf
-    conf.getOption("spark.graft.broadcastNodes")
-      .orElse(conf.getOption("spark.graft.cc.broadcastNodes"))
-      .getOrElse((2L * 1024 * 1024).toString).toLong
-  }
-
   private def largeStar(e: DataFrame, measuredEdges: Long = Long.MaxValue): DataFrame = {
     // explode, not self-union: one scan of the round's (materialized)
     // edge frame instead of two, and no alias-swapped Union for
@@ -1265,7 +1257,7 @@ object Dedup {
     val m0 = sym.groupBy("u").agg(min("v").as("mn"))
       .select(col("u"), least(col("mn"), col("u")).as("m"))
     // m0 has one row per node; nodes ≤ 2·edges, so gate on 2·E
-    val m = if (measuredEdges <= ccBroadcastMax(e) / 2) broadcast(m0) else m0
+    val m = if (measuredEdges <= Fixpoint.broadcastMaxRows(e) / 2) broadcast(m0) else m0
     sym.join(m, "u")
       .filter(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
@@ -1285,7 +1277,7 @@ object Dedup {
     val m0 = or.groupBy("u").agg(min("v").as("m"))
     // m0 ≤ |e| rows, and |largeStar(cur)| ≤ |cur| = measuredEdges —
     // so the loop's pre-largeStar count is a sound bound here too
-    val m = if (measuredEdges <= ccBroadcastMax(e)) broadcast(m0) else m0
+    val m = if (measuredEdges <= Fixpoint.broadcastMaxRows(e)) broadcast(m0) else m0
     or.join(m, "u")
       .select(explode(array(
         struct(col("v").as("a"), col("m").as("b")),
@@ -1311,8 +1303,8 @@ object Dedup {
    * Convergence is detected in two tiers: a one-aggregate checksum
    * (count + bit_xor'd xxhash64 of the edge rows) gates each round for
    * pennies, and only when the checksum matches does the exact
-   * two-sided EXCEPT run to confirm — so the loop pays one tiny
-   * aggregate per round instead of two set-difference shuffles, and
+   * one-sided EXCEPT run to confirm — so the loop pays one tiny
+   * aggregate per round instead of set-difference shuffles, and
    * a checksum collision can never cause a wrong early stop (it only
    * triggers the exact check). Rounds are materialized through
    * [[graft.core.Materialize.iter]] so lineage stays flat — set
@@ -1324,46 +1316,21 @@ object Dedup {
    * union-find and min-label paths.
    */
   private[operators] def dupClustersBigGraph(edges: DataFrame, maxIters: Int = 30): DataFrame = {
-    // the checksum RIDES the round's materialization job
-    // (Dataset.observe): one job per round, not materialize + a
-    // separate checksum aggregate — at hundreds of rounds the driver
-    // round-trip cadence, not the data, is the loop's bottleneck.
-    // bit_xor, not sum: xxhash64 values span the full 64-bit range
-    // and a summed checksum overflows under ANSI arithmetic.
-    def materializeWithChecksum(e: DataFrame): (DataFrame, (Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val mat = e.observe(obs, count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("x"))
-        .materializeRound
-      val m = obs.get // ready: the eager materialization was the action
-      (mat, (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long]))
-    }
-    var (cur, curSum) = materializeWithChecksum(
-      edges.filter(col("u") =!= col("v")).distinct())
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val (next, nextSum) = materializeWithChecksum(
-        smallStar(largeStar(cur, curSum._1), curSum._1))
-      // one-sided exact check: both frames are distinct row sets and
-      // the matched checksum already proved equal counts, so
-      // next ⊆ cur at equal cardinality ⟹ set equality — the second
-      // (cur \ next) job proved nothing and is dropped. The except
-      // runs only on checksum match (short-circuit &&): once at the
-      // fixpoint, never per round.
-      converged = nextSum == curSum &&
-        next.except(cur).limit(1).count() == 0
-      cur = next
-      curSum = nextSum
-      i += 1
-    }
-    // exiting on the iteration cap (not the fixpoint check) would emit
-    // labels from a non-converged forest — wrong cluster ids with no
-    // signal. O(log² n) rounds suffice for any graph, so a trip here
-    // means maxIters was set far too low for the input; fail loudly.
-    require(converged,
-      s"dupClustersBigGraph: star-forest fixpoint not reached in $maxIters rounds " +
-        "(large-star/small-star needs ~2*log2(n)^2 worst case); raise maxIters")
+    // the checksum (count + bit_xor'd xxhash64 of the edge rows)
+    // RIDES the round's materialization job: one job per round, and
+    // the exact except runs only on a checksum match — once, at the
+    // fixpoint. Exiting on the round cap would emit labels from a
+    // non-converged forest (wrong cluster ids with no signal);
+    // O(log² n) rounds suffice for any graph, so the driver fails
+    // loudly instead.
+    val metrics = Fixpoint.checksum("u", "v")
+    val seed = Fixpoint.materialize("dupClustersBigGraph",
+      edges.filter(col("u") =!= col("v")).distinct(), metrics)
+    val cur = Fixpoint.run("dupClustersBigGraph", seed, maxIters, 1, metrics,
+        Fixpoint.Until.Checksum) { (e, measured) =>
+      val n = measured.getOrElse(Long.MaxValue)
+      smallStar(largeStar(e, n), n)
+    }.state
     // at fixpoint edges are (child → root) stars; roots appear only
     // on the right side, so union them back in as their own label
     cur.select(col("u").as("doc_id"), col("v").as("cluster_id"))

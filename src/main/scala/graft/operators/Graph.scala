@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixpoint
+import graft.core.Fixpoint.Until
 import graft.core.Materialize.MaterializeOps
 
 /**
@@ -114,49 +116,9 @@ object Graph {
         round(sum(col("term")), 6).as("modularity"))
   }
 
-  /** Sentinel: resolve the fusion depth from the EXECUTION REGIME.
-    * Fusing k relax rounds into one job divides the per-round driver
-    * dispatch by k — the measured multi-process tax on fixpoint loops
-    * (BASELINE.md r12: graph_bfs 1.48× MP, pure dispatch; r13 fused:
-    * 0.94×) — but pays up to k−1 rounds of REAL no-op work past
-    * convergence. On a single-JVM `local[*]` master dispatch is
-    * in-process (~free), so fusing only buys the overshoot: the r13
-    * committed record priced the constant fuse=2 default at 1.2–1.3×
-    * on bfs/harmonic/sssp_converged locally. The default is therefore
-    * regime-resolved, not constant: 1 under local[*], 2 across any
-    * process boundary (local-cluster/standalone/YARN/k8s). Explicit
-    * values override. */
-  val AutoFuse: Int = -1
-  private def resolveFuse(df: DataFrame, fuse: Int): Int =
-    if (fuse != AutoFuse) fuse
-    else {
-      val m = df.sparkSession.sparkContext.master
-      if (m.startsWith("local") && !m.startsWith("local-cluster")) 1 else 2
-    }
-
-  /** Shared measured-size broadcast threshold for node-sized sides of
-    * the iterative loops (frontiers, distance tables, keep sets) —
-    * one knob, documented at [[coreness]]: ~3-4× 16 B/row hashed, so
-    * the 2M default is 100-200 MB of driver/executor memory.
-    * Operator-neutral key `spark.graft.broadcastNodes`; the
-    * historical `spark.graft.coreness.broadcastNodes` (which kCore /
-    * kTruss / BFS / SSSP all read before the rename) stays honored
-    * as a fallback so existing deployments keep their tuning. */
-  private[operators] def broadcastMaxRows(df: DataFrame): Long = {
-    val conf = df.sparkSession.conf
-    conf.getOption("spark.graft.broadcastNodes")
-      .orElse(conf.getOption("spark.graft.coreness.broadcastNodes"))
-      .getOrElse((2L * 1024 * 1024).toString).toLong
-  }
-
-  /** Broadcast `side` when the measured row count cleared the gate.
-    * Only MATERIALIZED frames ride this (a broadcast is itself a
-    * driver barrier, so broadcasting a lazy mid-block aggregate
-    * serializes the fused job — measured counterproductive on the
-    * coreness fixture); the frontier loops pass the count observed on
-    * the previous round's own materialization job. */
-  private def gateBcast(side: DataFrame, measuredRows: Long): DataFrame =
-    if (measuredRows <= broadcastMaxRows(side)) broadcast(side) else side
+  /** Fusion-depth sentinel: resolve from the execution regime
+    * ([[Fixpoint.AutoFuse]]). */
+  val AutoFuse: Int = Fixpoint.AutoFuse
 
   /**
    * Bounded BFS: exact shortest-hop distances (≤ `maxDepth`) from the
@@ -176,40 +138,45 @@ object Graph {
    * drop), so results are identical to the unfused loop (law-tested).
    */
   def bfsDistances(edges0: DataFrame, source: DataFrame,
-      maxDepth: Int = 3, fuse: Int = AutoFuse): DataFrame = {
-    val fz = resolveFuse(edges0, fuse)
+      maxDepth: Int = 3, fuse: Int = AutoFuse): DataFrame =
+    relax("bfsDistances", edges0, source.select(col("node"), lit(0L).as("dist")),
+      Nil, col("dist") + 1L, maxDepth, fuse, Until.Rounds)
+
+  /**
+   * The relaxation loop shared by [[bfsDistances]],
+   * [[harmonicCentrality]] and the two SSSP variants: state is
+   * (carry…, node, dist) — `carry` keys independent walks (harmonic's
+   * source column) — and each round joins the frontier onto the edge
+   * side, steps `dist` along the edge (`step`), and keeps the per-key
+   * minimum. The edge side is hash-partitioned on src and materialized
+   * ONCE, so rounds move only state-sized rows; the seed is
+   * materialized with its count BEFORE the first gate (gating a lazy
+   * source frame would run its whole upstream build inside a
+   * BroadcastExchange — a driver barrier under
+   * spark.sql.broadcastTimeout). The state's row count rides each
+   * block's own materialization job, so the first round of a block
+   * picks its join from MEASURED size: a frontier under the gate
+   * broadcasts and the pre-partitioned edge side never moves.
+   */
+  private def relax(op: String, edges0: DataFrame, seed: DataFrame, carry: Seq[String],
+      step: Column, rounds: Int, fuse: Int, until: Until): DataFrame = {
+    val fz = Fixpoint.resolveFuse(edges0, fuse)
     val edges = edges0.repartition(col("src")).materializeRound
-    val obs0 = org.apache.spark.sql.Observation()
-    var dist = source.select(col("node"), lit(0L).as("dist"))
-      .observe(obs0, count(lit(1)).as("n")).materializeRound
-    // the distance-table row count rides each round's own
-    // materialization job, so the relax join picks its strategy from
-    // MEASURED size: a node-sized frontier under the gate broadcasts
-    // (the pre-partitioned edge side never moves and pays no sort);
-    // only the first sub-round of a fused block is gated — inner
-    // frontiers are lazy aggregates, and broadcasting those would
-    // serialize the fused job on mid-plan driver barriers.
-    var lastN = obs0.get("n").asInstanceOf[Long]
-    var done = 0
-    while (done < maxDepth) {
-      val k = math.max(1, math.min(fz, maxDepth - done))
-      var d = dist
-      for (j <- 1 to k) {
+    val metrics =
+      if (until == Until.Checksum) Fixpoint.checksum(carry :+ "node" :+ "dist": _*)
+      else Seq(Fixpoint.rowCount)
+    val keys = carry.map(col)
+    Fixpoint.run(op, Fixpoint.materialize(op, seed, metrics), rounds, fz, metrics, until) {
+      (d, measured) =>
         // name-based join: the fused plan joins `edges` against a
         // subplan that already CONTAINS `edges`; USING-resolution
         // stays unambiguous under Spark's relation deduplication
-        val frontier0 = d.select(col("node").as("src"), col("dist"))
-        val frontier = if (j == 1) gateBcast(frontier0, lastN) else frontier0
+        val frontier0 = d.select(keys ++ Seq(col("node").as("src"), col("dist")): _*)
+        val frontier = measured.fold(frontier0)(Fixpoint.gate(frontier0, _))
         val next = edges.join(frontier, Seq("src"))
-          .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
-        d = d.unionAll(next).groupBy("node").agg(min("dist").as("dist"))
-      }
-      val obs = org.apache.spark.sql.Observation()
-      dist = d.observe(obs, count(lit(1)).as("n")).materializeRound
-      lastN = obs.get("n").asInstanceOf[Long]
-      done += k
-    }
-    dist
+          .select(keys ++ Seq(col("dst").as("node"), step.as("dist")): _*)
+        d.unionByName(next).groupBy(keys :+ col("node"): _*).agg(min("dist").as("dist"))
+    }.state
   }
 
   /**
@@ -224,37 +191,13 @@ object Graph {
    * than looping [[bfsDistances]] per source.
    */
   def harmonicCentrality(edges0: DataFrame, sources: DataFrame,
-      maxDepth: Int = 3, fuse: Int = AutoFuse): DataFrame = {
-    val fz = resolveFuse(edges0, fuse)
-    val edges = edges0.repartition(col("src")).materializeRound
-    val obs0 = org.apache.spark.sql.Observation()
-    var dist = sources
-      .select(col("node").as("s"), col("node"), lit(0L).as("dist"))
-      .observe(obs0, count(lit(1)).as("n")).materializeRound
-    // measured-size broadcast gate on the (source, node, dist) state —
-    // same discipline and caveats as bfsDistances (state rows ≤
-    // |sources| × reach, so the same row-count threshold applies)
-    var lastN = obs0.get("n").asInstanceOf[Long]
-    var done = 0
-    while (done < maxDepth) { // k rounds per job — see bfsDistances
-      val k = math.max(1, math.min(fz, maxDepth - done))
-      var d = dist
-      for (j <- 1 to k) {
-        val frontier0 = d.select(col("s"), col("node").as("src"), col("dist"))
-        val frontier = if (j == 1) gateBcast(frontier0, lastN) else frontier0
-        val next = edges.join(frontier, Seq("src"))
-          .select(col("s"), col("dst").as("node"), (col("dist") + 1L).as("dist"))
-        d = d.unionByName(next).groupBy("s", "node").agg(min("dist").as("dist"))
-      }
-      val obs = org.apache.spark.sql.Observation()
-      dist = d.observe(obs, count(lit(1)).as("n")).materializeRound
-      lastN = obs.get("n").asInstanceOf[Long]
-      done += k
-    }
-    dist.filter(col("dist") > 0)
+      maxDepth: Int = 3, fuse: Int = AutoFuse): DataFrame =
+    relax("harmonicCentrality", edges0,
+      sources.select(col("node").as("s"), col("node"), lit(0L).as("dist")),
+      Seq("s"), col("dist") + 1L, maxDepth, fuse, Until.Rounds)
+      .filter(col("dist") > 0)
       .groupBy("node")
       .agg(round(sum(lit(1.0) / col("dist")), 6).as("harmonic"))
-  }
 
   /**
    * Global clustering coefficient: 3·triangles / wedges, where a
@@ -371,7 +314,7 @@ object Graph {
    */
   def kTruss(edges0: DataFrame, k: Int, maxIters: Int = 30): DataFrame = {
     require(k >= 3, s"k-truss is defined for k >= 3, got $k")
-    val bcastMax = broadcastMaxRows(edges0)
+    val bcastMax = Fixpoint.broadcastMaxRows(edges0)
     // FROZEN orientation: the (initial degree, id) total order is
     // attached to the canonical edges ONCE and carried through every
     // peel round — triangle single-enumeration only needs SOME fixed
@@ -392,19 +335,12 @@ object Graph {
     // planner/AQE picks) — they run ONCE, not per round
     val sym0 = edges0.select(col("src"), col("dst"))
     val deg0 = sym0.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-    val obs0 = org.apache.spark.sql.Observation()
-    var canon = sym0
+    val seed = Fixpoint.materialize("kTruss", sym0
       .filter(col("src") < col("dst")).distinct()
       .join(deg0.select(col("node").as("src"), col("deg").as("dsrc")), "src")
       .join(deg0.select(col("node").as("dst"), col("deg").as("ddst")), "dst")
-      .select(col("src"), col("dst"), col("dsrc"), col("ddst"))
-      .observe(obs0, count(lit(1)).as("n")).materializeRound
-    var prevEdges = obs0.get("n").asInstanceOf[Long]
-    var lastSupport: DataFrame = null
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val small = prevEdges <= bcastMax
+      .select(col("src"), col("dst"), col("dsrc"), col("ddst")), Seq(Fixpoint.rowCount))
+    def support(canon: DataFrame): DataFrame = {
       // orientation is a FILTER over the carried ranks — no per-round
       // degree work; the wedge key (rank struct) rides each oriented
       // edge so wedge pairs order by the same total order
@@ -422,7 +358,7 @@ object Graph {
         .join(oriented.select(col("u").as("w1"), col("v").as("w2")),
           Seq("w1", "w2"), "left_semi")
         .select(col("u"), col("w1"), col("w2"))
-      val support = tris.select(explode(array(
+      tris.select(explode(array(
           struct(least(col("u"), col("w1")).as("src"),
             greatest(col("u"), col("w1")).as("dst")),
           struct(least(col("u"), col("w2")).as("src"),
@@ -431,24 +367,18 @@ object Graph {
             greatest(col("w1"), col("w2")).as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .groupBy("src", "dst").agg(count(lit(1)).as("support"))
-      lastSupport = support
-      val strong = support.filter(col("support") >= k - 2)
-      val obs = org.apache.spark.sql.Observation()
-      val next = canon
-        .join(if (small) broadcast(strong) else strong, Seq("src", "dst"), "left_semi")
-        .observe(obs, count(lit(1)).as("n"))
-        .materializeRound
-      val n = obs.get("n").asInstanceOf[Long]
-      if (n == prevEdges) converged = true
-      prevEdges = n
-      canon = next
-      i += 1
     }
-    require(converged, s"kTruss: no fixpoint after $maxIters peel rounds")
-    // at fixpoint the last support was computed over the final edge
-    // set itself, so it IS the in-truss support (carried rank columns
-    // are internal — the output contract stays (src, dst, support))
-    canon.select(col("src"), col("dst")).join(lastSupport, Seq("src", "dst"))
+    val r = Fixpoint.run("kTruss", seed, maxIters, 1, Seq(Fixpoint.rowCount), Until.Stable) {
+      (canon, measured) =>
+        val strong = support(canon).filter(col("support") >= k - 2)
+        val small = measured.exists(_ <= bcastMax)
+        canon.join(if (small) broadcast(strong) else strong, Seq("src", "dst"), "left_semi")
+    }
+    // at fixpoint the support computed over the previous edge set is
+    // over the final edge set itself (the peel removed nothing), so it
+    // IS the in-truss support (carried rank columns are internal — the
+    // output contract stays (src, dst, support))
+    r.state.select(col("src"), col("dst")).join(support(r.prev), Seq("src", "dst"))
   }
 
   /**
@@ -492,65 +422,33 @@ object Graph {
     // broadcast barrier (the previous form built one keep-set
     // broadcast per round: measured 54 jobs / 1.6 s of inter-job
     // driver gaps on the ~13-round sf0.1 peel; this form runs
-    // `fuseRounds` peel rounds per job with per-sub-round observes —
-    // the [[coreness]] discipline — and reads 14 jobs / 0.5 s gaps).
+    // Fixpoint.FuseRounds peel rounds per job with per-sub-round
+    // observes — the [[coreness]] discipline — and reads 14 jobs /
+    // 0.5 s gaps).
     // Above any broadcast threshold nothing changes: the plan never
     // depended on a broadcast in the first place (the billion-edge
     // regime runs the identical shape).
     val edges = edges0.select(col("src"), col("dst"))
       .repartition(col("dst")).materializeRound
-    val fuseRounds = math.max(1, edges0.sparkSession.conf
-      .get("spark.graft.kcore.fuseRounds", "4").toInt)
-    // A block observe's count, read after the block's materialization
-    // completed. A missing metrics key is not an error: when a
-    // sub-round's frame is runtime-empty, AQE's empty-relation
-    // propagation folds the observed subtree into a LocalRelation and
-    // the CollectMetrics node never runs — which can only happen when
-    // the observed frame had zero rows, so the count IS 0 (pinned by
-    // the under-k-graph law test, which peels everything away).
-    def observedCount(o: org.apache.spark.sql.Observation): Long =
-      o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    val obs0 = org.apache.spark.sql.Observation()
-    var state = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .observe(obs0, count(lit(1)).as("n")).materializeRound
-    var lastN = observedCount(obs0)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val kk = math.max(1, math.min(fuseRounds, maxIters - i))
-      // each sub-round's surviving-node count rides the block job as
-      // a mid-plan observe; counts are monotone non-increasing and an
-      // unchanged count proves nothing dropped ⇒ degrees unchanged ⇒
-      // fixpoint — detection at round granularity, dispatch at block
-      // granularity (see coreness). Sub-round state is referenced
-      // twice (drop filter + degree update), but both references sit
-      // on reused exchanges, so the duplicated segment re-reads
-      // node-sized shuffle output instead of recomputing the chain.
-      var d = state
-      val subObs = (1 to kk).map { j =>
-        val o = org.apache.spark.sql.Observation()
-        val newly = d.filter(col("deg") < k).select(col("node").as("dst"))
-        val dec = edges.join(newly.hint("shuffle_hash"), Seq("dst"))
-          .groupBy(col("src").as("node")).agg(count(lit(1)).as("dec"))
-        d = d.filter(col("deg") >= k)
-          .join(dec.hint("shuffle_hash"), Seq("node"), "left")
-          .select(col("node"),
-            (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
-          .observe(o, count(lit(1)).as("n"))
-        o
-      }
-      val mat = d.materializeRound
-      val counts = subObs.map(observedCount)
-      converged = (lastN +: counts).sliding(2).exists {
-        case Seq(a, b) => a == b
-        case _ => false
-      }
-      state = mat
-      lastN = counts.last
-      i += kk
-    }
-    require(converged, s"kCore: no fixpoint after $maxIters peel rounds")
-    state.select(col("node"), col("deg"))
+    val seed = Fixpoint.materialize("kCore",
+      edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")), Seq(Fixpoint.rowCount))
+    // each sub-round's surviving-node count rides the block job as a
+    // mid-plan observe; counts are monotone non-increasing and an
+    // unchanged count proves nothing dropped ⇒ degrees unchanged ⇒
+    // fixpoint — detection at round granularity, dispatch at block
+    // granularity (see coreness). Sub-round state is referenced twice
+    // (drop filter + degree update), but both references sit on reused
+    // exchanges, so the duplicated segment re-reads node-sized shuffle
+    // output instead of recomputing the chain.
+    Fixpoint.run("kCore", seed, maxIters, Fixpoint.FuseRounds, Seq(Fixpoint.rowCount),
+        Until.Stable, eachRound = true) { (d, _) =>
+      val newly = d.filter(col("deg") < k).select(col("node").as("dst"))
+      val dec = edges.join(newly.hint("shuffle_hash"), Seq("dst"))
+        .groupBy(col("src").as("node")).agg(count(lit(1)).as("dec"))
+      d.filter(col("deg") >= k)
+        .join(dec.hint("shuffle_hash"), Seq("node"), "left")
+        .select(col("node"), (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
+    }.state.select(col("node"), col("deg"))
   }
 
   /**
@@ -586,16 +484,6 @@ object Graph {
     // measured-size broadcast below takes the round to 5.5 s).
     val hIndexAgg = org.apache.spark.sql.functions.udaf(
       graft.functions.Aggregators.HIndex)
-    // A/B alternative (spark.graft.coreness.hofHindex): collect_list
-    // + sort + higher-order filter — h = #{i : arr_desc[i] ≥ i+1}.
-    // Same value for every multiset (classic h-index identity); the
-    // buffer is O(group degree) values vs the histogram's O(distinct
-    // values), so the UDAF stays the default for hub-heavy graphs.
-    val useHof = edges.sparkSession.conf
-      .get("spark.graft.coreness.hofHindex", "false").toBoolean
-    def hofHIndex(cd: org.apache.spark.sql.Column) =
-      size(filter(sort_array(collect_list(cd), asc = false),
-        (x, i) => x >= i.cast("long") + lit(1L))).cast("long")
     def hIndexRound(vals: DataFrame, edgeSide: DataFrame,
         bcastVals: Boolean = false): DataFrame = {
       val v = vals.select(col("node").as("dst"), col("c").as("cd"))
@@ -608,7 +496,7 @@ object Graph {
       edgeSide
         .join(if (bcastVals) broadcast(v) else v.hint("shuffle_hash"), "dst")
         .groupBy(col("src").as("node"))
-        .agg((if (useHof) hofHIndex(col("cd")) else hIndexAgg(col("cd"))).as("c"))
+        .agg(hIndexAgg(col("cd")).as("c"))
     }
     val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("c"))
 
@@ -623,30 +511,23 @@ object Graph {
     // probe fixture, hub degree 53k). Chain mass is measurable up
     // front: the degree-≤2 node fraction is ~0 on every low-diameter
     // fixture and ≥70% on the Zipf fixture, so ≥30% chooses frontier.
-    val obs0 = org.apache.spark.sql.Observation()
-    val degMat = deg.observe(obs0, count(lit(1)).as("n"),
-      coalesce(sum(col("c")), lit(0L)).as("s"),
-      coalesce(sum((col("c") <= 2).cast("long")), lit(0L)).as("low"))
-      .materializeRound
-    val m0 = obs0.get
-    val (n0, s0) = (m0("n").asInstanceOf[Long], m0("s").asInstanceOf[Long])
-    val useFrontier = frontier ||
-      (adaptive && m0("low").asInstanceOf[Long] * 10L >= n0 * 3L)
+    val seed = Fixpoint.materialize("coreness", deg, Seq(Fixpoint.rowCount,
+      "s" -> coalesce(sum(col("c")), lit(0L)),
+      "low" -> coalesce(sum((col("c") <= 2).cast("long")), lit(0L))))
+    val n0 = seed.metrics("n")
+    val useFrontier = frontier || (adaptive && seed.metrics("low") * 10L >= n0 * 3L)
 
     // the observe carries the EXACT node count up front, so the join
     // strategy is chosen from measured size, not an estimate: a value
     // table under the threshold pins the edge side in place — zero
     // edge-row movement per round; above it (the billion-node regime)
-    // every application falls back to the shuffled hash join. Default
-    // 2M rows: a hashed broadcast relation costs ~3-4× the raw
-    // 16 B/row (UnsafeRow + map), so 2M ≈ 100-200 MB on the driver and
-    // on every executor — conservative for a default driver;
-    // `spark.graft.coreness.broadcastNodes` raises it on big-memory
-    // clusters. Value tables only ever SHRINK from n0 (h-index output
-    // groups ≤ nodes), so one threshold covers every round in BOTH
-    // modes — frontier rounds broadcast their (≤ node-sized) dirty
-    // sets and recomputed deltas under the same gate.
-    val bcast = n0 <= broadcastMaxRows(edges)
+    // every application falls back to the shuffled hash join (the
+    // threshold is [[Fixpoint.broadcastMaxRows]]). Value tables only
+    // ever SHRINK from n0 (h-index output groups ≤ nodes), so one
+    // threshold covers every round in BOTH modes — frontier rounds
+    // broadcast their (≤ node-sized) dirty sets and recomputed deltas
+    // under the same gate.
+    val bcast = n0 <= Fixpoint.broadcastMaxRows(edges)
     def gated(d: DataFrame): DataFrame = if (bcast) broadcast(d) else d
 
     // MID-RUN ESCAPE HATCH: the seed-time predictor above is a
@@ -665,105 +546,65 @@ object Graph {
     // frontier cost the graph would have paid anyway.
     val escapeBudget = edges.sparkSession.conf
       .get("spark.graft.coreness.escapeRounds", "16").toInt
-    var escVals: DataFrame = degMat
-    var escChanged: DataFrame = null // null ⇒ all nodes dirty
-    var roundsUsed = 0
 
-    if (!useFrontier) {
-      // DEFAULT: full recompute, `fuseRounds` h-index applications
-      // composed lazily per materialization — values are per-node
-      // monotone non-increasing, so the composed block's
-      // observe-carried (count, sum) matches the previous one iff NO
-      // sub-round changed anything; fixpoint detection stays sound at
-      // 1/k the driver cadence for any block depth k. Only the FIRST
-      // application of a block rides the broadcast gate (its value
-      // side is the block's materialized input): broadcasting the
-      // mid-block LAZY aggregates made each a serialized driver
-      // barrier — the r15 shape paid ~5 jobs per 2-round block
-      // (measured: 57 jobs, 1.9 s of inter-job driver gaps on the
-      // 18-round sf0.1 fixpoint) and an escalating 2/4/8 schedule
-      // collapsed to 7.9 s vs 3.8 because its nested broadcast
-      // exchanges serialize. Mid-block applications instead SHUFFLE
-      // the node-sized value aggregate to the dst-pre-partitioned
-      // edge side (localCheckpoint preserves the edge partitioning,
-      // so no edge row ever moves — the LPA/pagerank pin), which
-      // keeps the whole block one multi-stage job; that is also the
-      // only shape that is safe at any scale (no driver barrier, no
-      // broadcastTimeout on a mid-plan aggregate). With the barriers
-      // gone, deeper fusion amortizes dispatch: same-JVM interleaved
-      // min-of-4 at sf0.1 read fuse=1/2/4/6/8 = 4.70/4.26/3.85/3.71/
-      // 3.66 s vs the r15 shape's 5.3-5.7 (57 jobs → 36 at fuse=4).
-      // The cost of depth is up to k−1 real no-op rounds inside the
-      // final block at scale, so the default stays modest (4) and
-      // the deeper local-regime values are a knob, not a default.
-      val fuseRounds = math.max(1, edges.sparkSession.conf
-        .get("spark.graft.coreness.fuseRounds", "4").toInt)
-      var vals = degMat
-      var prevVals = degMat
-      var cur = (n0, s0)
-      var converged = false
-      var i = 0
-      val budget = if (adaptive) math.min(maxIters, escapeBudget) else maxIters
-      while (!converged && i < budget) {
-        val k = math.max(1, math.min(fuseRounds, budget - i))
-        // EVERY sub-round's (count, sum) rides the block job as its
-        // own mid-plan observe (CollectMetrics passes rows through —
-        // zero extra jobs), so convergence is detected at ROUND
-        // granularity even though dispatch is block-granular: values
-        // are per-node monotone non-increasing, so the FIRST
-        // sub-round whose sum matches its predecessor's proves the
-        // fixpoint, and every later sub-round in the block is a
-        // provable no-op (the block output IS the fixpoint). A deep
-        // block therefore never needs a follow-up block just to
-        // confirm — the at-scale overshoot is bounded by the rounds
-        // already inside the committed job, not by k plus a
-        // confirmation block.
-        var d = vals
-        val subObs = (1 to k).map { j =>
-          val o = org.apache.spark.sql.Observation()
-          d = hIndexRound(d, edges, bcastVals = bcast && j == 1)
-            .observe(o, count(lit(1)).as("n"),
-              coalesce(sum(col("c")), lit(0L)).as("s"))
-          o
+    // DEFAULT: full recompute, Fixpoint.FuseRounds h-index applications
+    // composed lazily per materialization — values are per-node
+    // monotone non-increasing, so a sub-round's observe-carried
+    // (count, sum) matches its predecessor's iff it changed nothing.
+    // EVERY sub-round's (count, sum) rides the block job as its own
+    // mid-plan observe (CollectMetrics passes rows through — zero
+    // extra jobs), so convergence is detected at ROUND granularity
+    // even though dispatch is block-granular: the first matching
+    // sub-round proves the fixpoint, every later sub-round in the
+    // block is a provable no-op, and a deep block never needs a
+    // follow-up block just to confirm. Only the FIRST application of a
+    // block rides the broadcast gate (its value side is the block's
+    // materialized input): broadcasting the mid-block LAZY aggregates
+    // made each a serialized driver barrier — the r15 shape paid ~5
+    // jobs per 2-round block (measured: 57 jobs, 1.9 s of inter-job
+    // driver gaps on the 18-round sf0.1 fixpoint) and an escalating
+    // 2/4/8 schedule collapsed to 7.9 s vs 3.8 because its nested
+    // broadcast exchanges serialize. Mid-block applications instead
+    // SHUFFLE the node-sized value aggregate to the dst-pre-partitioned
+    // edge side (localCheckpoint preserves the edge partitioning, so
+    // no edge row ever moves — the LPA/pagerank pin), which keeps the
+    // whole block one multi-stage job; that is also the only shape
+    // that is safe at any scale (no driver barrier, no
+    // broadcastTimeout on a mid-plan aggregate). 57 jobs → 36 at
+    // fuse=4 on the sf0.1 fixture.
+    val (escVals, escDirty, roundsUsed) =
+      if (useFrontier) (seed.state, seed.state.select("node"), 0)
+      else {
+        val budget = if (adaptive) math.min(maxIters, escapeBudget) else maxIters
+        val r = Fixpoint.run("coreness", seed, budget, Fixpoint.FuseRounds,
+            Seq(Fixpoint.rowCount, "s" -> coalesce(sum(col("c")), lit(0L))), Until.Stable,
+            eachRound = true, loud = !adaptive) { (d, measured) =>
+          hIndexRound(d, edges, bcastVals = bcast && measured.isDefined)
         }
-        val mat = d.materializeRound
-        val sums = subObs.map { o =>
-          val m = o.get
-          (m("n").asInstanceOf[Long], m("s").asInstanceOf[Long])
-        }
-        converged = (cur +: sums).sliding(2).exists {
-          case Seq(a, b) => a == b
-          case _ => false
-        }
-        prevVals = vals
-        vals = mat
-        cur = sums.last
-        i += k
+        if (r.converged) return r.state.select(col("node"), col("c").as("coreness"))
+        // budget exhausted: escape to frontier mode from the CURRENT
+        // state, seeding the dirty set with the nodes that changed
+        // over the LAST default block instead of marking the whole
+        // graph dirty. Sound and exact: values are monotone
+        // non-increasing, so a node unchanged across the block
+        // end-to-end was unchanged in every sub-round (no transient
+        // dips to rebound from), and every node was recomputed from
+        // its neighbors at the block's final sub-round — only
+        // block-changers can invalidate a neighbor. The first frontier
+        // round then touches the changed neighborhood, not the graph.
+        // The delta seed is only valid when at least one block
+        // actually RAN: with escapeRounds=0 the loop never executes,
+        // prev == state == the degree seed, and an empty dirty set
+        // would read as instant convergence — emitting raw degrees as
+        // coreness. All nodes are dirty in that case.
+        val dirty =
+          if (r.rounds == 0) r.state.select("node")
+          else r.state.select(col("node"), col("c"))
+            .join(gated(r.prev.select(col("node"), col("c").as("c_prev"))), "node")
+            .filter(col("c") =!= col("c_prev"))
+            .select("node")
+        (r.state, dirty, r.rounds)
       }
-      if (converged) return vals.select(col("node"), col("c").as("coreness"))
-      require(adaptive, s"coreness: no fixpoint after $maxIters h-index rounds")
-      // budget exhausted: escape to frontier mode from the CURRENT
-      // state, seeding the dirty set with the nodes that changed over
-      // the LAST default block instead of marking the whole graph
-      // dirty. Sound and exact: values are monotone non-increasing,
-      // so a node unchanged across the block end-to-end was unchanged
-      // in both sub-rounds (no transient dips to rebound from), and
-      // every node was recomputed from its neighbors at the block's
-      // final sub-round — only block-changers can invalidate a
-      // neighbor. The first frontier round then touches the changed
-      // neighborhood, not the graph (previously one full recompute).
-      // The delta seed is only valid when at least one block actually
-      // RAN: with escapeRounds=0 the loop never executes, prevVals ==
-      // vals == the degree seed, and an empty dirty set would read as
-      // instant convergence — emitting raw degrees as coreness. Leave
-      // escChanged null (⇒ all nodes dirty) in that case.
-      escVals = vals
-      if (i > 0) escChanged = vals.select(col("node"), col("c"))
-        .join(gated(prevVals.select(col("node"), col("c").as("c_prev"))), "node")
-        .filter(col("c") =!= col("c_prev"))
-        .select("node")
-      roundsUsed = i
-    }
 
     // FRONTIER mode (Montresor's optimization): a node's h-index
     // reads only its neighbors' values, so after the first round only
@@ -779,11 +620,13 @@ object Graph {
     // moved-count rides each round's job via observe. Law-tested
     // equal to the default mode.
     val edgesBySrc = edges.repartition(col("src")).materializeRound
-    var vals = escVals
-    var changed = if (escChanged != null) escChanged else vals.select("node")
-    var converged = false
-    var i = roundsUsed
-    while (!converged && i < maxIters) {
+    Fixpoint.run("coreness", Fixpoint.Step(escVals, Map.empty), maxIters - roundsUsed, 1,
+        Seq("m" -> coalesce(sum(col("moved")), lit(0L))), Until.Zero("m")) { (d, _) =>
+      // the seed's dirty set is given; later rounds read it off the
+      // previous round's moved flag
+      val (vals, changed) =
+        if (d eq escVals) (escVals, escDirty)
+        else (d.select("node", "c"), d.filter(col("moved") === 1L).select("node"))
       // no distinct on dirty: it is only ever a semi-join right side.
       // Every node-sized side (changed, dirty, the recomputed delta,
       // and the value join inside hIndexRound) rides the measured-size
@@ -796,21 +639,12 @@ object Graph {
       val recomputed = hIndexRound(
         vals, edgesBySrc.join(gated(dirty), Seq("src"), "left_semi"), bcast)
         .withColumnRenamed("c", "c_new")
-      val obs = org.apache.spark.sql.Observation()
-      val mat = vals.withColumnRenamed("c", "c_old")
+      vals.withColumnRenamed("c", "c_old")
         .join(gated(recomputed), Seq("node"), "left_outer")
         .select(col("node"), coalesce(col("c_new"), col("c_old")).as("c"),
           (col("c_new").isNotNull && col("c_new") =!= col("c_old"))
             .cast("long").as("moved"))
-        .observe(obs, coalesce(sum(col("moved")), lit(0L)).as("m"))
-        .materializeRound
-      converged = obs.get("m").asInstanceOf[Long] == 0L
-      vals = mat.select("node", "c")
-      changed = mat.filter(col("moved") === 1L).select("node")
-      i += 1
-    }
-    require(converged, s"coreness: no fixpoint after $maxIters h-index rounds")
-    vals.select(col("node"), col("c").as("coreness"))
+    }.state.select(col("node"), col("c").as("coreness"))
   }
 
   /**
@@ -864,39 +698,10 @@ object Graph {
    * pre-rounded so cross-engine replays sum identical doubles.
    */
   def weightedShortestPaths(wEdges: DataFrame, source: DataFrame,
-      rounds: Int = 4, fuse: Int = AutoFuse): DataFrame = {
-    val fz = resolveFuse(wEdges, fuse)
-    // one edge exchange TOTAL (same discipline as bfsDistances): the
-    // edge side is pre-partitioned on the join key and materialized,
-    // so no round re-shuffles it — only dist-sized rows move per round
-    val edges = wEdges.repartition(col("src")).materializeRound
-    // materialize the seed with an observed count (the bfsDistances
-    // discipline) BEFORE the first gate: gating a lazy source frame
-    // would run its whole upstream build inside a BroadcastExchange —
-    // a driver barrier subject to spark.sql.broadcastTimeout — which
-    // is exactly what gateBcast's materialized-frames-only rule bans
-    val obs0 = org.apache.spark.sql.Observation()
-    var dist = source.select(col("node"), lit(0.0).as("dist"))
-      .observe(obs0, count(lit(1)).as("n")).materializeRound
-    var lastN = obs0.get("n").asInstanceOf[Long]
-    var done = 0
-    while (done < rounds) { // k relax rounds per job — see bfsDistances
-      val k = math.max(1, math.min(fz, rounds - done))
-      var d = dist
-      for (j <- 1 to k) {
-        val frontier0 = d.select(col("node").as("src"), col("dist"))
-        val frontier = if (j == 1) gateBcast(frontier0, lastN) else frontier0
-        val relax = edges.join(frontier, Seq("src"))
-          .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-        d = d.unionByName(relax).groupBy("node").agg(min("dist").as("dist"))
-      }
-      val obs = org.apache.spark.sql.Observation()
-      dist = d.observe(obs, count(lit(1)).as("n")).materializeRound
-      lastN = obs.get("n").asInstanceOf[Long]
-      done += k
-    }
-    dist.select(col("node"), round(col("dist"), 6).as("dist"))
-  }
+      rounds: Int = 4, fuse: Int = AutoFuse): DataFrame =
+    relax("weightedShortestPaths", wEdges, source.select(col("node"), lit(0.0).as("dist")),
+      Nil, col("dist") + col("w"), rounds, fuse, Until.Rounds)
+      .select(col("node"), round(col("dist"), 6).as("dist"))
 
   /**
    * [[weightedShortestPaths]] run to FIXPOINT instead of a fixed hop
@@ -905,9 +710,12 @@ object Graph {
    * same two-tier check as the CC loop: a one-aggregate checksum
    * (count + bit_xor of the hashed rows) per round, with the exact
    * two-sided EXCEPT only on checksum match — one tiny job per round,
-   * no wrong early stop possible. `maxRounds` bounds runaway graphs
-   * with negative-cost cycles (true Bellman–Ford termination);
-   * distances are exact at fixpoint for non-negative weights.
+   * no wrong early stop possible (the checksum rides the relax job
+   * itself, so it costs no job of its own). `maxRounds` bounds runaway
+   * graphs with negative-cost cycles (true Bellman–Ford termination):
+   * the call fails loudly there rather than return distances that are
+   * not a fixpoint. Distances are exact at fixpoint for non-negative
+   * weights.
    *
    * `fuse` relax rounds run per materialized job (see
    * [[bfsDistances]] — per-round driver dispatch is the measured
@@ -925,51 +733,11 @@ object Graph {
    * fixpoints across a process boundary).
    */
   def weightedShortestPathsConverged(wEdges: DataFrame, source: DataFrame,
-      maxRounds: Int = 64, fuse: Int = AutoFuse): DataFrame = {
-    val fz = resolveFuse(wEdges, fuse)
-    // checksum rides the relax job itself (Dataset.observe) — ONE job
-    // per round instead of materialize + checksum aggregate; at
-    // hundreds of rounds the driver cadence is the bottleneck, not
-    // the data (same discipline as Dedup.dupClustersBigGraph)
-    def materializeWithChecksum(d: DataFrame): (DataFrame, (Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val mat = d.observe(obs, count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col("node"), col("dist"))), lit(0L)).as("x"))
-        .materializeRound
-      val m = obs.get // ready: the eager materialization was the action
-      (mat, (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long]))
-    }
-    // one edge exchange TOTAL: pre-partition the edge side on the join
-    // key and materialize — rounds re-shuffle only dist-sized rows
-    val edges = wEdges.repartition(col("src")).materializeRound
-    var (dist, cur) = materializeWithChecksum(
-      source.select(col("node"), lit(0.0).as("dist")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxRounds) {
-      val k = math.max(1, math.min(fz, maxRounds - i))
-      var d = dist
-      for (j <- 1 to k) {
-        // measured-size broadcast gate on the materialized frontier
-        // (count rides the checksum observe) — bfsDistances discipline
-        val frontier0 = d.select(col("node").as("src"), col("dist"))
-        val frontier = if (j == 1) gateBcast(frontier0, cur._1) else frontier0
-        val relax = edges.join(frontier, Seq("src"))
-          .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-        d = d.unionByName(relax).groupBy("node").agg(min("dist").as("dist"))
-      }
-      val (next, nextSum) = materializeWithChecksum(d)
-      // one-sided exact check (the dupClustersBigGraph argument):
-      // both frames are unique-by-node aggregates and the matched
-      // checksum proved equal counts, so one empty difference ⟹ equal
-      converged = nextSum == cur &&
-        next.except(dist).limit(1).count() == 0
-      dist = next
-      cur = nextSum
-      i += k
-    }
-    dist.select(col("node"), round(col("dist"), 6).as("dist"))
-  }
+      maxRounds: Int = 64, fuse: Int = AutoFuse): DataFrame =
+    relax("weightedShortestPathsConverged", wEdges,
+      source.select(col("node"), lit(0.0).as("dist")),
+      Nil, col("dist") + col("w"), maxRounds, fuse, Until.Checksum)
+      .select(col("node"), round(col("dist"), 6).as("dist"))
 
   /**
    * Personalized PageRank (random walk with restart): the teleport

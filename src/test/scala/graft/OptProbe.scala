@@ -100,59 +100,6 @@ object OptProbe {
       spark.stop(); return
     }
 
-    // special mode: same-JVM interleaved A/B of the coreness block
-    // depth (spark.graft.coreness.fuseRounds)
-    if (names.sameElements(Array("coreness_fuse"))) {
-      import graft.operators.Graph
-      val li = Tables.t(spark, sfDir, "lineitem").filter(col("l_orderkey") % 10 === 0)
-      val edges = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey").localCheckpoint()
-      println(s"[optprobe] edges=${edges.count()}")
-      val depths = Seq(1, 2, 4, 6, 8)
-      Graph.coreness(edges).count() // warm the path
-      val times = scala.collection.mutable.Map.empty[Int, List[Double]]
-        .withDefaultValue(Nil)
-      for (_ <- 1 to reps; d <- depths) {
-        spark.conf.set("spark.graft.coreness.fuseRounds", d.toString)
-        val t0 = System.nanoTime()
-        val n = Graph.coreness(edges).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        times(d) = t :: times(d)
-        if (times(d).size == 1) println(s"[optprobe] fuse=$d rows=$n")
-      }
-      depths.foreach { d =>
-        val ts = times(d)
-        println(f"[optprobe] fuse=$d min=${ts.min}%.3f " +
-          f"all=${ts.reverse.map(t => f"$t%.3f").mkString(",")}")
-      }
-      spark.stop(); return
-    }
-
-    // special mode: same-JVM interleaved A/B of the h-index aggregate
-    // (histogram UDAF vs collect_list + higher-order filter)
-    if (names.sameElements(Array("coreness_hof"))) {
-      import graft.operators.Graph
-      val li = Tables.t(spark, sfDir, "lineitem").filter(col("l_orderkey") % 10 === 0)
-      val edges = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey").localCheckpoint()
-      println(s"[optprobe] edges=${edges.count()}")
-      Graph.coreness(edges).count() // warm
-      val times = scala.collection.mutable.Map.empty[String, List[Double]]
-        .withDefaultValue(Nil)
-      for (_ <- 1 to reps; hof <- Seq("false", "true")) {
-        spark.conf.set("spark.graft.coreness.hofHindex", hof)
-        val t0 = System.nanoTime()
-        val n = Graph.coreness(edges).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        times(hof) = t :: times(hof)
-        if (times(hof).size == 1) println(s"[optprobe] hof=$hof rows=$n")
-      }
-      Seq("false", "true").foreach { h =>
-        val ts = times(h)
-        println(f"[optprobe] hof=$h min=${ts.min}%.3f " +
-          f"all=${ts.reverse.map(t => f"$t%.3f").mkString(",")}")
-      }
-      spark.stop(); return
-    }
-
     // special mode: co-occurrence edge build + kcore/ktruss phases
     if (names.sameElements(Array("graph_phases"))) {
       import graft.operators.Graph
@@ -227,204 +174,6 @@ object OptProbe {
       spark.stop(); return
     }
 
-    // special mode: kTruss old-vs-new in one JVM
-    if (names.sameElements(Array("ktruss_ab"))) {
-      import graft.operators.Graph
-      import graft.core.Materialize.MaterializeOps
-      def time(tag: String)(f: => Any): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); val r = f; ((System.nanoTime() - t0) / 1e9, r)
-        }
-        println(f"[optprobe] $tag min=${ts.map(_._1).min}%.3f " +
-          f"all=${ts.map(t => f"${t._1}%.3f").mkString(",")} last=${ts.last._2}")
-      }
-      val li = Tables.t(spark, sfDir, "lineitem").filter(col("l_orderkey") % 10 === 0)
-      val edges0 = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey").localCheckpoint()
-      def kTrussOld(k: Int): Long = {
-        val obs0 = org.apache.spark.sql.Observation()
-        var canon = edges0.select(col("src"), col("dst"))
-          .filter(col("src") < col("dst")).distinct()
-          .observe(obs0, count(lit(1)).as("n")).materializeRound
-        var prevEdges = obs0.get("n").asInstanceOf[Long]
-        val bcastMax = 2L * 1024 * 1024
-        var lastSupport: org.apache.spark.sql.DataFrame = null
-        var converged = false
-        var i = 0
-        while (!converged && i < 30) {
-          val small = prevEdges <= bcastMax
-          val sym = canon.unionByName(
-            canon.select(col("dst").as("src"), col("src").as("dst")))
-          val tris = Graph.orientedTriangles(sym, bcastDeg = small)
-          val support = tris.select(explode(array(
-              struct(least(col("u"), col("w1")).as("src"),
-                greatest(col("u"), col("w1")).as("dst")),
-              struct(least(col("u"), col("w2")).as("src"),
-                greatest(col("u"), col("w2")).as("dst")),
-              struct(least(col("w1"), col("w2")).as("src"),
-                greatest(col("w1"), col("w2")).as("dst")))).as("e"))
-            .select(col("e.src").as("src"), col("e.dst").as("dst"))
-            .groupBy("src", "dst").agg(count(lit(1)).as("support"))
-          lastSupport = support
-          val strong = support.filter(col("support") >= k - 2)
-          val obs = org.apache.spark.sql.Observation()
-          val next = canon
-            .join(if (small) broadcast(strong) else strong, Seq("src", "dst"), "left_semi")
-            .observe(obs, count(lit(1)).as("n"))
-            .materializeRound
-          val n = obs.get("n").asInstanceOf[Long]
-          if (n == prevEdges) converged = true
-          prevEdges = n
-          canon = next
-          i += 1
-        }
-        println(s"[optprobe] ktruss_old rounds=$i")
-        canon.join(lastSupport, Seq("src", "dst")).count()
-      }
-      def kTrussNew(k: Int): Long = Graph.kTruss(edges0, k).count()
-      time("ktruss_old")(kTrussOld(5)); time("ktruss_new")(kTrussNew(5))
-      time("ktruss_old2")(kTrussOld(5)); time("ktruss_new2")(kTrussNew(5))
-      spark.stop(); return
-    }
-
-    // special mode: kCore old-vs-new in one JVM
-    if (names.sameElements(Array("kcore_ab"))) {
-      import graft.operators.Graph
-      import graft.core.Materialize.MaterializeOps
-      def time(tag: String)(f: => Any): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); val r = f; ((System.nanoTime() - t0) / 1e9, r)
-        }
-        println(f"[optprobe] $tag min=${ts.map(_._1).min}%.3f " +
-          f"all=${ts.map(t => f"${t._1}%.3f").mkString(",")} last=${ts.last._2}")
-      }
-      val li = Tables.t(spark, sfDir, "lineitem").filter(col("l_orderkey") % 10 === 0)
-      val edges0 = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey").localCheckpoint()
-      def kCoreOld(k: Int): Long = {
-        var edges = edges0.select(col("src"), col("dst")).materializeRound
-        var prevEdges = -1L
-        var converged = false
-        var i = 0
-        while (!converged && i < 50) {
-          val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-            .filter(col("deg") >= k).select("src")
-          val obs = org.apache.spark.sql.Observation()
-          val next = edges
-            .join(keep, Seq("src"), "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-            .observe(obs, count(lit(1)).as("n"))
-            .materializeRound
-          val n = obs.get("n").asInstanceOf[Long]
-          if (n == prevEdges) converged = true
-          prevEdges = n
-          edges = next
-          i += 1
-        }
-        println(s"[optprobe] kcore_old rounds=$i")
-        edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")).count()
-      }
-      def kCoreNew(k: Int): Long = Graph.kCore(edges0, k).count()
-      // union-agg decrement form: each sub-round ends in ONE exchange
-      // (the union groupBy), which is the AQE reuse point — the two
-      // consumers of a sub-round's state (drop filter, survivor
-      // filter) re-read that shuffle instead of re-executing the chain
-      def kCoreUA(k: Int, fuse: Int): Long = {
-        val edges = edges0.select(col("src"), col("dst"))
-          .repartition(col("dst")).materializeRound
-        def obsN(o: org.apache.spark.sql.Observation): Long =
-          o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-        val obs0 = org.apache.spark.sql.Observation()
-        var state = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-          .observe(obs0, count(lit(1)).as("n")).materializeRound
-        var lastN = obsN(obs0)
-        var converged = false
-        var i = 0
-        while (!converged && i < 50) {
-          val kk = math.max(1, math.min(fuse, 50 - i))
-          var d = state
-          val subObs = (1 to kk).map { _ =>
-            val o = org.apache.spark.sql.Observation()
-            val newly = d.filter(col("deg") < k).select(col("node").as("dst"))
-            val hits = edges.join(newly.hint("shuffle_hash"), Seq("dst"))
-              .select(col("src").as("node"), lit(-1L).as("delta"), lit(0).as("base"))
-            d = d.filter(col("deg") >= k)
-              .select(col("node"), col("deg").as("delta"), lit(1).as("base"))
-              .unionAll(hits)
-              .groupBy("node").agg(sum("delta").as("deg"), max("base").as("base"))
-              .filter(col("base") === 1)
-              .select(col("node"), col("deg"))
-              .observe(o, count(lit(1)).as("n"))
-            o
-          }
-          val mat = d.materializeRound
-          val counts = subObs.map(obsN)
-          converged = (lastN +: counts).sliding(2).exists {
-            case Seq(a, b) => a == b
-            case _ => false
-          }
-          state = mat
-          lastN = counts.last
-          i += kk
-        }
-        require(converged)
-        state.count()
-      }
-      // UAR: union-agg + explicit repartition(node) at each sub-round
-      // top, so the two consumers re-read ONE reused shuffle instead
-      // of re-executing the final agg (duplication doubles per level
-      // without it: ua8 measured 12-13 s vs ua4's 2.2-2.4)
-      def kCoreUAR(k: Int, fuse: Int): Long = {
-        val edges = edges0.select(col("src"), col("dst"))
-          .repartition(col("dst")).materializeRound
-        def obsN(o: org.apache.spark.sql.Observation): Long =
-          o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-        val obs0 = org.apache.spark.sql.Observation()
-        var state = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-          .observe(obs0, count(lit(1)).as("n")).materializeRound
-        var lastN = obsN(obs0)
-        var converged = false
-        var i = 0
-        while (!converged && i < 50) {
-          val kk = math.max(1, math.min(fuse, 50 - i))
-          var d = state
-          val subObs = (1 to kk).map { _ =>
-            val o = org.apache.spark.sql.Observation()
-            val newly = d.filter(col("deg") < k).select(col("node").as("dst"))
-            val hits = edges.join(newly.hint("shuffle_hash"), Seq("dst"))
-              .select(col("src").as("node"), lit(-1L).as("delta"), lit(0).as("base"))
-            d = d.filter(col("deg") >= k)
-              .select(col("node"), col("deg").as("delta"), lit(1).as("base"))
-              .unionAll(hits)
-              .groupBy("node").agg(sum("delta").as("deg"), max("base").as("base"))
-              .filter(col("base") === 1)
-              .select(col("node"), col("deg"))
-              .observe(o, count(lit(1)).as("n"))
-              .repartition(col("node"))
-            o
-          }
-          val mat = d.materializeRound
-          val counts = subObs.map(obsN)
-          converged = (lastN +: counts).sliding(2).exists {
-            case Seq(a, b) => a == b
-            case _ => false
-          }
-          state = mat
-          lastN = counts.last
-          i += kk
-        }
-        require(converged)
-        state.count()
-      }
-      time("kcore_old")(kCoreOld(8)); time("kcore_new")(kCoreNew(8))
-      time("kcore_ua4")(kCoreUA(8, 4)); time("kcore_ua8")(kCoreUA(8, 8))
-      time("kcore_uar4")(kCoreUAR(8, 4)); time("kcore_uar8")(kCoreUAR(8, 8))
-      time("kcore_uar12")(kCoreUAR(8, 12))
-      time("kcore_old2")(kCoreOld(8)); time("kcore_new2")(kCoreNew(8))
-      time("kcore_ua4b")(kCoreUA(8, 4)); time("kcore_ua8b")(kCoreUA(8, 8))
-      time("kcore_uar4b")(kCoreUAR(8, 4)); time("kcore_uar8b")(kCoreUAR(8, 8))
-      time("kcore_uar12b")(kCoreUAR(8, 12))
-      spark.stop(); return
-    }
-
     // special mode: ngramJaccardPairs old-vs-new in one JVM
     if (names.sameElements(Array("jp_ab"))) {
       import graft.operators.Dedup
@@ -463,80 +212,6 @@ object OptProbe {
       time("jp_old")(oldJp(0.7)); time("jp_new")(newJp(0.7))
       time("jp_old2")(oldJp(0.7)); time("jp_new2")(newJp(0.7))
       time("jp_old_t0")(oldJp(0.0)); time("jp_new_t0")(newJp(0.0))
-      spark.stop(); return
-    }
-
-    // special mode: connected-components star loop old-vs-new in one JVM
-    if (names.sameElements(Array("cc_ab"))) {
-      import graft.operators.Dedup
-      import graft.core.Materialize.MaterializeOps
-      def time(tag: String)(f: => Any): Unit = {
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); val r = f; ((System.nanoTime() - t0) / 1e9, r)
-        }
-        println(f"[optprobe] $tag min=${ts.map(_._1).min}%.3f " +
-          f"all=${ts.map(t => f"${t._1}%.3f").mkString(",")} last=${ts.last._2}")
-      }
-      val pairs = Dedup.ngramJaccardPairs(
-        Tables.t(spark, sfDir, "documents"), n = 5, threshold = 0.7).localCheckpoint()
-      def largeStarOld(e: org.apache.spark.sql.DataFrame) = {
-        val sym = e.select(explode(array(
-            struct(col("u"), col("v")),
-            struct(col("v").as("u"), col("u").as("v")))).as("p"))
-          .select(col("p.u").as("u"), col("p.v").as("v"))
-        val m = sym.groupBy("u").agg(min("v").as("mn"))
-          .select(col("u"), least(col("mn"), col("u")).as("m"))
-        sym.join(m, "u").filter(col("v") > col("u"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .filter(col("u") =!= col("v")).distinct()
-      }
-      def smallStarOld(e: org.apache.spark.sql.DataFrame) = {
-        val or = e.select(greatest(col("u"), col("v")).as("u"),
-            least(col("u"), col("v")).as("v"))
-          .filter(col("u") =!= col("v")).distinct()
-        val m = or.groupBy("u").agg(min("v").as("m"))
-        or.join(m, "u")
-          .select(explode(array(
-            struct(col("v").as("a"), col("m").as("b")),
-            struct(col("u").as("a"), col("m").as("b")))).as("p"))
-          .select(col("p.a").as("u"), col("p.b").as("v"))
-          .filter(col("u") =!= col("v")).distinct()
-      }
-      def ccOld(): Long = {
-        def mwc(e: org.apache.spark.sql.DataFrame) = {
-          val obs = org.apache.spark.sql.Observation()
-          val mat = e.observe(obs, count(lit(1)).as("n"),
-            coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("x"))
-            .materializeRound
-          val m = obs.get
-          (mat, (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long]))
-        }
-        val edges = pairs.select(explode(array(
-            struct(col("a_id").as("u"), col("b_id").as("v")),
-            struct(col("b_id").as("u"), col("a_id").as("v")))).as("p"))
-          .select(col("p.u").as("u"), col("p.v").as("v")).distinct()
-        var (cur, curSum) = mwc(edges.filter(col("u") =!= col("v")).distinct())
-        var converged = false
-        var i = 0
-        while (!converged && i < 30) {
-          val (next, nextSum) = mwc(smallStarOld(largeStarOld(cur)))
-          converged = nextSum == curSum &&
-            next.except(cur).limit(1).count() == 0 &&
-            cur.except(next).limit(1).count() == 0
-          cur = next; curSum = nextSum; i += 1
-        }
-        cur.select(col("u").as("doc_id"), col("v").as("cluster_id"))
-          .union(cur.select(col("v").as("doc_id"), col("v").as("cluster_id")))
-          .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
-          .groupBy("cluster_id").agg(count(lit(1))).count()
-      }
-      def ccNew(): Long =
-        Dedup.dupClusters(pairs, smallGraphEdges = 0L)
-          .groupBy("cluster_id").agg(count(lit(1))).count()
-      time("cc_old")(ccOld())
-      time("cc_new")(ccNew())
-      time("cc_old2")(ccOld())
-      time("cc_new2")(ccNew())
       spark.stop(); return
     }
 
