@@ -1,7 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 import graft.core.Materialize.MaterializeOps
 
@@ -23,7 +26,9 @@ import graft.core.Materialize.MaterializeOps
  *    inside the fused job);
  *  - convergence is tested at ROUND granularity ([[Until]]) and a loop
  *    that runs out of rounds without converging fails loudly;
- *  - a metric the plan never reported is read by one rule ([[read]]).
+ *  - a metric the plan never reported is read by one rule ([[read]]);
+ *  - a problem whose edge rows fit the driver-memory budget skips the
+ *    loop and finishes on the driver ([[finishLocally]]).
  */
 private[graft] object Fixpoint {
 
@@ -55,12 +60,13 @@ private[graft] object Fixpoint {
       if (m.startsWith("local") && !m.startsWith("local-cluster")) 1 else 2
     }
 
-  /** Measured-size broadcast threshold for node-sized sides of the
+  /** The one driver-memory budget, `spark.graft.broadcastNodes` rows:
+    * the measured-size broadcast threshold for node-sized sides of the
     * iterative loops (frontiers, distance tables, keep sets, min-label
-    * tables), one knob `spark.graft.broadcastNodes`. A hashed broadcast
-    * relation costs ~3-4× the raw 16 B/row (UnsafeRow + map), so the
-    * 2M-row default is 100-200 MB of driver/executor memory; raise it
-    * on big-memory clusters. */
+    * tables) and the edge-row bound of a local finish. A hashed
+    * broadcast relation costs ~3-4× the raw 16 B/row (UnsafeRow + map),
+    * so the 2M-row default is 100-200 MB of driver/executor memory;
+    * raise it on big-memory clusters. */
   def broadcastMaxRows(df: DataFrame): Long =
     df.sparkSession.conf.get("spark.graft.broadcastNodes", (2L * 1024 * 1024).toString).toLong
 
@@ -194,8 +200,67 @@ private[graft] object Fixpoint {
       last = ms.last
       i += k
     }
-    require(converged || until == Until.Rounds || !loud,
-      s"$op: no fixpoint after $maxRounds rounds; raise its round cap")
+    requireConverged(op, converged || until == Until.Rounds || !loud, maxRounds)
     Result(state, prev, i, converged)
+  }
+
+  /** The loud round-cap failure, shared by [[run]] and the local kernels. */
+  def requireConverged(op: String, converged: Boolean, maxRounds: Int): Unit =
+    require(converged, s"$op: no fixpoint after $maxRounds rounds; raise its round cap")
+
+  /** Whether [[run]] with [[Until.Checksum]] converges within
+    * `maxRounds` on a loop whose state changes in its first `changing`
+    * rounds only: a block of `fuse` rounds passes the test iff it
+    * changed nothing, i.e. iff it starts at or after round `changing`. */
+  def checksumConverges(changing: Int, maxRounds: Int, fuse: Int): Boolean = {
+    val k = math.max(1, fuse)
+    (changing + k - 1) / k * k < maxRounds
+  }
+
+  /**
+   * Finish on the driver (phase 1: the whole problem). When `rows`,
+   * observed on a job the operator already ran, is at most `limit`,
+   * `inputs` are gathered in ONE job and `kernel` computes the result
+   * in memory; its rows become a frame of the schema it names, which
+   * the operator takes from its distributed state so both paths return
+   * the same schema. Input columns are longs (node ids), except a
+   * double weight column named `w`. None — the distributed loop runs —
+   * above the limit, on any other column type, when an input holds a
+   * null (the joins treat null keys in ways no kernel mirrors), or
+   * when the kernel declines. The decision costs no job.
+   */
+  def finishLocally(rows: Long, limit: Long, inputs: DataFrame*)(
+      kernel: Seq[Array[Array[Long]]] => Option[(StructType, Seq[Row])]): Option[DataFrame] =
+    if (rows > limit || !inputs.forall(_.schema.forall(f =>
+        f.dataType == (if (f.name == "w") DoubleType else LongType)))) None
+    else gather(inputs).flatMap(kernel).map { case (schema, out) =>
+      inputs.head.sparkSession.createDataFrame(out.asJava, schema)
+    }
+
+  /** The local finish's one bounded collect: every frame's columns as
+    * primitive arrays built per partition (a double as its raw long
+    * bits), never Rows; None if any input holds a null. */
+  private def gather(frames: Seq[DataFrame]): Option[Seq[Array[Array[Long]]]] = {
+    val parts = frames.zipWithIndex.map { case (df, f) =>
+      val double = df.schema.fields.map(_.dataType == DoubleType)
+      df.queryExecution.toRdd.mapPartitions { it =>
+        val cols = Array.fill(double.length)(new scala.collection.mutable.ArrayBuilder.ofLong)
+        var nulls = false
+        it.foreach { r =>
+          if (double.indices.exists(r.isNullAt)) nulls = true
+          else double.indices.foreach { c =>
+            cols(c) += (if (double(c)) java.lang.Double.doubleToRawLongBits(r.getDouble(c))
+              else r.getLong(c))
+          }
+        }
+        Iterator((f, nulls, cols.map(_.result())))
+      }
+    }
+    val got = frames.head.sparkSession.sparkContext.union(parts).collect()
+    if (got.exists(_._2)) None
+    else Some(frames.indices.map { f =>
+      val mine = got.filter(_._1 == f).map(_._3)
+      Array.tabulate(frames(f).schema.length)(c => Array.concat(mine.map(_(c)).toIndexedSeq: _*))
+    })
   }
 }

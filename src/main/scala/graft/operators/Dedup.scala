@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
-import graft.core.Fixpoint
+import graft.core.{Fixpoint, LocalGraph}
 import graft.core.Materialize.MaterializeOps
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -1185,15 +1186,26 @@ object Dedup {
     // against it, and recomputing the upstream pair pipeline per
     // round would dominate the whole operator. Symmetrize via explode
     // (one scan of the upstream pair pipeline, not two; no self-union)
-    val edges = pairs.select(explode(array(
+    // The edge count rides the same job, and a graph of at most
+    // `smallGraphEdges` rows runs union-find on the driver
+    // (LocalGraph.components) after one collect.
+    val step = Fixpoint.materialize("dupClusters", pairs.select(explode(array(
         struct(col("a_id").as("u"), col("b_id").as("v")),
         struct(col("b_id").as("u"), col("a_id").as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
-      .distinct()
-      .materializeRound
-    if (smallGraphEdges > 0 && edges.count() <= smallGraphEdges)
-      return driverUnionFind(edges)
-    dupClustersBigGraph(edges, maxIters)
+      .distinct(), Seq(Fixpoint.rowCount))
+    val edges = step.state
+    // integral ids widen to long, as the clusters' long columns always did
+    val ids = if (Seq(ByteType, ShortType, IntegerType).contains(edges.schema("u").dataType))
+      edges.select(col("u").cast(LongType), col("v").cast(LongType)) else edges
+    (if (smallGraphEdges <= 0) None
+    else Fixpoint.finishLocally(step.metrics("n"), smallGraphEdges, ids) {
+      case Seq(Array(u, v)) =>
+        val (id, root) = LocalGraph.components(u, v)
+        Some(StructType(Seq(StructField("doc_id", LongType, nullable = false),
+          StructField("cluster_id", LongType, nullable = false))) ->
+          id.indices.map(i => Row(id(i), root(i))))
+    }).getOrElse(dupClustersBigGraph(edges, maxIters))
   }
 
   /**
@@ -1920,33 +1932,6 @@ object Dedup {
         col("best.q").as("kept_quality"),
         col("n_members"),
         (col("n_members") - 1).as("n_dropped"))
-  }
-
-  /** Path-compressed union-find over a collected edge list (small-graph fast path). */
-  private def driverUnionFind(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges.as[(Long, Long)].collect()
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x0: Long): Long = {
-      var x = x0
-      while (parent.getOrDefault(x, x) != x) {
-        val p = parent.getOrDefault(x, x)
-        parent.put(x, parent.getOrDefault(p, p))
-        x = p
-      }
-      x
-    }
-    es.foreach { case (u, v) =>
-      parent.putIfAbsent(u, u); parent.putIfAbsent(v, v)
-      val (ru, rv) = (find(u), find(v))
-      // min-root union keeps cluster_id = min reachable id, matching
-      // the distributed loop's labeling exactly
-      if (ru != rv) { if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv) }
-    }
-    import scala.jdk.CollectionConverters._
-    val out = parent.keySet().asScala.toSeq.map(id => (id, find(id)))
-    spark.createDataset(out).toDF("doc_id", "cluster_id")
   }
 
   /**

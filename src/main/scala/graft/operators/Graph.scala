@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.core.Fixpoint
+import graft.core.{Fixpoint, LocalGraph}
 import graft.core.Fixpoint.Until
 import graft.core.Materialize.MaterializeOps
 
@@ -140,43 +140,68 @@ object Graph {
   def bfsDistances(edges0: DataFrame, source: DataFrame,
       maxDepth: Int = 3, fuse: Int = AutoFuse): DataFrame =
     relax("bfsDistances", edges0, source.select(col("node"), lit(0L).as("dist")),
-      Nil, col("dist") + 1L, maxDepth, fuse, Until.Rounds)
+      Nil, weighted = false, maxDepth, fuse, Until.Rounds)
 
   /**
    * The relaxation loop shared by [[bfsDistances]],
    * [[harmonicCentrality]] and the two SSSP variants: state is
    * (carry…, node, dist) — `carry` keys independent walks (harmonic's
    * source column) — and each round joins the frontier onto the edge
-   * side, steps `dist` along the edge (`step`), and keeps the per-key
-   * minimum. The edge side is hash-partitioned on src and materialized
-   * ONCE, so rounds move only state-sized rows; the seed is
-   * materialized with its count BEFORE the first gate (gating a lazy
-   * source frame would run its whole upstream build inside a
+   * side, steps `dist` along the edge (`+ w` when `weighted`, else
+   * `+ 1`), and keeps the per-key minimum. The edge side is
+   * hash-partitioned on src and materialized ONCE, so rounds move only
+   * state-sized rows; the seed is distinct (it is source-sized, and a
+   * repeated source row must not survive a loop that runs no round)
+   * and materialized with its count BEFORE the first gate (gating a
+   * lazy source frame would run its whole upstream build inside a
    * BroadcastExchange — a driver barrier under
    * spark.sql.broadcastTimeout). The state's row count rides each
    * block's own materialization job, so the first round of a block
    * picks its join from MEASURED size: a frontier under the gate
    * broadcasts and the pre-partitioned edge side never moves.
+   *
+   * Without carried keys, a graph whose edge rows and seed both fit
+   * [[Fixpoint.broadcastMaxRows]] (counted on the two materializations
+   * above) finishes on the driver instead: [[LocalGraph.relax]] runs
+   * the same synchronous rounds, and the checksum loop fails there
+   * exactly when its blocks would.
    */
-  private def relax(op: String, edges0: DataFrame, seed: DataFrame, carry: Seq[String],
-      step: Column, rounds: Int, fuse: Int, until: Until): DataFrame = {
+  private def relax(op: String, edges0: DataFrame, seed0: DataFrame, carry: Seq[String],
+      weighted: Boolean, rounds: Int, fuse: Int, until: Until): DataFrame = {
     val fz = Fixpoint.resolveFuse(edges0, fuse)
-    val edges = edges0.repartition(col("src")).materializeRound
+    val edgeStep = Fixpoint.materialize(op, edges0.repartition(col("src")), Seq(Fixpoint.rowCount))
+    val edges = edgeStep.state
     val metrics =
       if (until == Until.Checksum) Fixpoint.checksum(carry :+ "node" :+ "dist": _*)
       else Seq(Fixpoint.rowCount)
     val keys = carry.map(col)
-    Fixpoint.run(op, Fixpoint.materialize(op, seed, metrics), rounds, fz, metrics, until) {
-      (d, measured) =>
-        // name-based join: the fused plan joins `edges` against a
-        // subplan that already CONTAINS `edges`; USING-resolution
-        // stays unambiguous under Spark's relation deduplication
-        val frontier0 = d.select(keys ++ Seq(col("node").as("src"), col("dist")): _*)
-        val frontier = measured.fold(frontier0)(Fixpoint.gate(frontier0, _))
-        val next = edges.join(frontier, Seq("src"))
-          .select(keys ++ Seq(col("dst").as("node"), step.as("dist")): _*)
-        d.unionByName(next).groupBy(keys :+ col("node"): _*).agg(min("dist").as("dist"))
-    }.state
+    val step = if (weighted) col("dist") + col("w") else col("dist") + 1L
+    def round(d: DataFrame, measured: Option[Long]): DataFrame = {
+      // name-based join: the fused plan joins `edges` against a
+      // subplan that already CONTAINS `edges`; USING-resolution
+      // stays unambiguous under Spark's relation deduplication
+      val frontier0 = d.select(keys ++ Seq(col("node").as("src"), col("dist")): _*)
+      val frontier = measured.fold(frontier0)(Fixpoint.gate(frontier0, _))
+      val next = edges.join(frontier, Seq("src"))
+        .select(keys ++ Seq(col("dst").as("node"), step.as("dist")): _*)
+      d.unionByName(next).groupBy(keys :+ col("node"): _*).agg(min("dist").as("dist"))
+    }
+    val seed = Fixpoint.materialize(op, seed0.distinct(), metrics)
+    val local = if (carry.nonEmpty) None else Fixpoint.finishLocally(
+        math.max(edgeStep.metrics("n"), seed.metrics("n")), Fixpoint.broadcastMaxRows(edges),
+        edges.select(Seq(col("src"), col("dst")) ++ (if (weighted) Seq(col("w")) else Nil): _*),
+        seed.state.select("node")) { case Seq(e, Array(nodes)) =>
+      val w = if (weighted) e(2).map(java.lang.Double.longBitsToDouble) else null
+      LocalGraph.relax(e(0), e(1), w, nodes, rounds).map { fix =>
+        Fixpoint.requireConverged(op, until != Until.Checksum ||
+          Fixpoint.checksumConverges(fix.rounds, rounds, fz), rounds)
+        (if (rounds == 0) seed.state else round(seed.state, None)).schema ->
+          fix.ids.indices.map { i =>
+            Row(fix.ids(i), if (weighted) fix.values(i) else fix.values(i).toLong)
+          }
+      }
+    }
+    local.getOrElse(Fixpoint.run(op, seed, rounds, fz, metrics, until)(round).state)
   }
 
   /**
@@ -194,7 +219,7 @@ object Graph {
       maxDepth: Int = 3, fuse: Int = AutoFuse): DataFrame =
     relax("harmonicCentrality", edges0,
       sources.select(col("node").as("s"), col("node"), lit(0L).as("dist")),
-      Seq("s"), col("dist") + 1L, maxDepth, fuse, Until.Rounds)
+      Seq("s"), weighted = false, maxDepth, fuse, Until.Rounds)
       .filter(col("dist") > 0)
       .groupBy("node")
       .agg(round(sum(lit(1.0) / col("dist")), 6).as("harmonic"))
@@ -428,10 +453,13 @@ object Graph {
     // Above any broadcast threshold nothing changes: the plan never
     // depended on a broadcast in the first place (the billion-edge
     // regime runs the identical shape).
-    val edges = edges0.select(col("src"), col("dst"))
-      .repartition(col("dst")).materializeRound
-    val seed = Fixpoint.materialize("kCore",
-      edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")), Seq(Fixpoint.rowCount))
+    // A graph whose edge rows, counted on their materialization, fit
+    // Fixpoint.broadcastMaxRows finishes on the driver instead
+    // (LocalGraph.kCore: the same peel rounds, the same round cap).
+    val edgeStep = Fixpoint.materialize("kCore",
+      edges0.select(col("src"), col("dst")).repartition(col("dst")), Seq(Fixpoint.rowCount))
+    val edges = edgeStep.state
+    val degrees = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     // each sub-round's surviving-node count rides the block job as a
     // mid-plan observe; counts are monotone non-increasing and an
     // unchanged count proves nothing dropped ⇒ degrees unchanged ⇒
@@ -440,15 +468,24 @@ object Graph {
     // (drop filter + degree update), but both references sit on reused
     // exchanges, so the duplicated segment re-reads node-sized shuffle
     // output instead of recomputing the chain.
-    Fixpoint.run("kCore", seed, maxIters, Fixpoint.FuseRounds, Seq(Fixpoint.rowCount),
-        Until.Stable, eachRound = true) { (d, _) =>
+    def peel(d: DataFrame): DataFrame = {
       val newly = d.filter(col("deg") < k).select(col("node").as("dst"))
       val dec = edges.join(newly.hint("shuffle_hash"), Seq("dst"))
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("dec"))
       d.filter(col("deg") >= k)
         .join(dec.hint("shuffle_hash"), Seq("node"), "left")
         .select(col("node"), (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
-    }.state.select(col("node"), col("deg"))
+    }
+    Fixpoint.finishLocally(edgeStep.metrics("n"), Fixpoint.broadcastMaxRows(edges), edges) {
+      case Seq(Array(src, dst)) =>
+        val fix = LocalGraph.kCore(src, dst, k, maxIters)
+        Fixpoint.requireConverged("kCore", fix.rounds <= maxIters, maxIters)
+        Some(peel(degrees).schema -> fix.ids.indices.map(i => Row(fix.ids(i), fix.values(i))))
+    }.getOrElse {
+      val seed = Fixpoint.materialize("kCore", degrees, Seq(Fixpoint.rowCount))
+      Fixpoint.run("kCore", seed, maxIters, Fixpoint.FuseRounds, Seq(Fixpoint.rowCount),
+        Until.Stable, eachRound = true)((d, _) => peel(d)).state
+    }.select(col("node"), col("deg"))
   }
 
   /**
@@ -546,6 +583,40 @@ object Graph {
     // frontier cost the graph would have paid anyway.
     val escapeBudget = edges.sparkSession.conf
       .get("spark.graft.coreness.escapeRounds", "16").toInt
+    val budget = if (adaptive) math.min(maxIters, escapeBudget) else maxIters
+
+    // FRONTIER mode (Montresor's optimization): a node's h-index
+    // reads only its neighbors' values, so after the first round only
+    // nodes with a CHANGED neighbor can move — per-round data volume
+    // scales with the frontier's edge neighborhood, not the graph.
+    // Costs ~5 stages/round vs the default's 3, so it LOSES where
+    // stage overhead dominates (measured 14.5 s vs the default's 5.5 s
+    // on the 242k-edge fixture whose frontier halves each round; the
+    // default additionally rides the histogram aggregate and the
+    // measured-size broadcast above) and wins where
+    // per-row volume dominates — the billion-edge regime this mode
+    // exists for. Both edge partitionings materialize once; the
+    // moved-count rides each round's job via observe. Law-tested
+    // equal to the default mode.
+    def frontierRound(vals: DataFrame, changed: DataFrame, edgesBySrc: DataFrame): DataFrame = {
+      // no distinct on dirty: it is only ever a semi-join right side.
+      // Every node-sized side (changed, dirty, the recomputed delta,
+      // and the value join inside hIndexRound) rides the measured-size
+      // broadcast gate computed at seed time — under the threshold a
+      // frontier round's only exchange is the h-index aggregate; above
+      // it everything falls back to shuffled joins as before.
+      val dirty = edges
+        .join(gated(changed.withColumnRenamed("node", "dst")), Seq("dst"), "left_semi")
+        .select(col("src"))
+      val recomputed = hIndexRound(
+        vals, edgesBySrc.join(gated(dirty), Seq("src"), "left_semi"), bcast)
+        .withColumnRenamed("c", "c_new")
+      vals.withColumnRenamed("c", "c_old")
+        .join(gated(recomputed), Seq("node"), "left_outer")
+        .select(col("node"), coalesce(col("c_new"), col("c_old")).as("c"),
+          (col("c_new").isNotNull && col("c_new") =!= col("c_old"))
+            .cast("long").as("moved"))
+    }
 
     // DEFAULT: full recompute, Fixpoint.FuseRounds h-index applications
     // composed lazily per materialization — values are per-node
@@ -572,79 +643,69 @@ object Graph {
     // that is safe at any scale (no driver barrier, no
     // broadcastTimeout on a mid-plan aggregate). 57 jobs → 36 at
     // fuse=4 on the sf0.1 fixture.
-    val (escVals, escDirty, roundsUsed) =
-      if (useFrontier) (seed.state, seed.state.select("node"), 0)
-      else {
-        val budget = if (adaptive) math.min(maxIters, escapeBudget) else maxIters
-        val r = Fixpoint.run("coreness", seed, budget, Fixpoint.FuseRounds,
-            Seq(Fixpoint.rowCount, "s" -> coalesce(sum(col("c")), lit(0L))), Until.Stable,
-            eachRound = true, loud = !adaptive) { (d, measured) =>
-          hIndexRound(d, edges, bcastVals = bcast && measured.isDefined)
+    def distributed(): DataFrame = {
+      val (escVals, escDirty, roundsUsed) =
+        if (useFrontier) (seed.state, seed.state.select("node"), 0)
+        else {
+          val r = Fixpoint.run("coreness", seed, budget, Fixpoint.FuseRounds,
+              Seq(Fixpoint.rowCount, "s" -> coalesce(sum(col("c")), lit(0L))), Until.Stable,
+              eachRound = true, loud = !adaptive) { (d, measured) =>
+            hIndexRound(d, edges, bcastVals = bcast && measured.isDefined)
+          }
+          if (r.converged) return r.state
+          // budget exhausted: escape to frontier mode from the CURRENT
+          // state, seeding the dirty set with the nodes that changed
+          // over the LAST default block instead of marking the whole
+          // graph dirty. Sound and exact: values are monotone
+          // non-increasing, so a node unchanged across the block
+          // end-to-end was unchanged in every sub-round (no transient
+          // dips to rebound from), and every node was recomputed from
+          // its neighbors at the block's final sub-round — only
+          // block-changers can invalidate a neighbor. The first frontier
+          // round then touches the changed neighborhood, not the graph.
+          // The delta seed is only valid when at least one block
+          // actually RAN: with escapeRounds=0 the loop never executes,
+          // prev == state == the degree seed, and an empty dirty set
+          // would read as instant convergence — emitting raw degrees as
+          // coreness. All nodes are dirty in that case.
+          val dirty =
+            if (r.rounds == 0) r.state.select("node")
+            else r.state.select(col("node"), col("c"))
+              .join(gated(r.prev.select(col("node"), col("c").as("c_prev"))), "node")
+              .filter(col("c") =!= col("c_prev"))
+              .select("node")
+          (r.state, dirty, r.rounds)
         }
-        if (r.converged) return r.state.select(col("node"), col("c").as("coreness"))
-        // budget exhausted: escape to frontier mode from the CURRENT
-        // state, seeding the dirty set with the nodes that changed
-        // over the LAST default block instead of marking the whole
-        // graph dirty. Sound and exact: values are monotone
-        // non-increasing, so a node unchanged across the block
-        // end-to-end was unchanged in every sub-round (no transient
-        // dips to rebound from), and every node was recomputed from
-        // its neighbors at the block's final sub-round — only
-        // block-changers can invalidate a neighbor. The first frontier
-        // round then touches the changed neighborhood, not the graph.
-        // The delta seed is only valid when at least one block
-        // actually RAN: with escapeRounds=0 the loop never executes,
-        // prev == state == the degree seed, and an empty dirty set
-        // would read as instant convergence — emitting raw degrees as
-        // coreness. All nodes are dirty in that case.
-        val dirty =
-          if (r.rounds == 0) r.state.select("node")
-          else r.state.select(col("node"), col("c"))
-            .join(gated(r.prev.select(col("node"), col("c").as("c_prev"))), "node")
-            .filter(col("c") =!= col("c_prev"))
-            .select("node")
-        (r.state, dirty, r.rounds)
-      }
 
-    // FRONTIER mode (Montresor's optimization): a node's h-index
-    // reads only its neighbors' values, so after the first round only
-    // nodes with a CHANGED neighbor can move — per-round data volume
-    // scales with the frontier's edge neighborhood, not the graph.
-    // Costs ~5 stages/round vs the default's 3, so it LOSES where
-    // stage overhead dominates (measured 14.5 s vs the default's 5.5 s
-    // on the 242k-edge fixture whose frontier halves each round; the
-    // default additionally rides the histogram aggregate and the
-    // measured-size broadcast above) and wins where
-    // per-row volume dominates — the billion-edge regime this mode
-    // exists for. Both edge partitionings materialize once; the
-    // moved-count rides each round's job via observe. Law-tested
-    // equal to the default mode.
-    val edgesBySrc = edges.repartition(col("src")).materializeRound
-    Fixpoint.run("coreness", Fixpoint.Step(escVals, Map.empty), maxIters - roundsUsed, 1,
-        Seq("m" -> coalesce(sum(col("moved")), lit(0L))), Until.Zero("m")) { (d, _) =>
-      // the seed's dirty set is given; later rounds read it off the
-      // previous round's moved flag
-      val (vals, changed) =
-        if (d eq escVals) (escVals, escDirty)
-        else (d.select("node", "c"), d.filter(col("moved") === 1L).select("node"))
-      // no distinct on dirty: it is only ever a semi-join right side.
-      // Every node-sized side (changed, dirty, the recomputed delta,
-      // and the value join inside hIndexRound) rides the measured-size
-      // broadcast gate computed at seed time — under the threshold a
-      // frontier round's only exchange is the h-index aggregate; above
-      // it everything falls back to shuffled joins as before.
-      val dirty = edges
-        .join(gated(changed.withColumnRenamed("node", "dst")), Seq("dst"), "left_semi")
-        .select(col("src"))
-      val recomputed = hIndexRound(
-        vals, edgesBySrc.join(gated(dirty), Seq("src"), "left_semi"), bcast)
-        .withColumnRenamed("c", "c_new")
-      vals.withColumnRenamed("c", "c_old")
-        .join(gated(recomputed), Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("c_new"), col("c_old")).as("c"),
-          (col("c_new").isNotNull && col("c_new") =!= col("c_old"))
-            .cast("long").as("moved"))
-    }.state.select(col("node"), col("c").as("coreness"))
+      val edgesBySrc = edges.repartition(col("src")).materializeRound
+      Fixpoint.run("coreness", Fixpoint.Step(escVals, Map.empty), maxIters - roundsUsed, 1,
+          Seq("m" -> coalesce(sum(col("moved")), lit(0L))), Until.Zero("m")) { (d, _) =>
+        // the seed's dirty set is given; later rounds read it off the
+        // previous round's moved flag
+        if (d eq escVals) frontierRound(escVals, escDirty, edgesBySrc)
+        else frontierRound(d.select("node", "c"), d.filter(col("moved") === 1L).select("node"),
+          edgesBySrc)
+      }.state
+    }
+
+    // LOCAL FINISH: the seed's `s` = Σdeg is the edge-row count, so a
+    // graph that fits Fixpoint.broadcastMaxRows skips both loops. The
+    // kernel's rounds are the Jacobi rounds of both modes (same values,
+    // same round cap); the schema is that of the mode that would have
+    // produced the state — default rounds, or frontier rounds from the
+    // seed, or from default values after an escape.
+    Fixpoint.finishLocally(seed.metrics("s"), Fixpoint.broadcastMaxRows(edges), edges) {
+      case Seq(Array(src, dst)) => LocalGraph.coreness(src, dst, maxIters).map { fix =>
+        Fixpoint.requireConverged("coreness", fix.rounds <= maxIters, maxIters)
+        val default = hIndexRound(seed.state, edges)
+        val base = if (budget == 0) seed.state else default
+        val state =
+          if (useFrontier) frontierRound(seed.state, seed.state.select("node"), edges)
+          else if (fix.rounds <= budget) default
+          else frontierRound(base, base.select("node"), edges)
+        state.select("node", "c").schema -> fix.ids.indices.map(i => Row(fix.ids(i), fix.values(i)))
+      }
+    }.getOrElse(distributed()).select(col("node"), col("c").as("coreness"))
   }
 
   /**
@@ -700,7 +761,7 @@ object Graph {
   def weightedShortestPaths(wEdges: DataFrame, source: DataFrame,
       rounds: Int = 4, fuse: Int = AutoFuse): DataFrame =
     relax("weightedShortestPaths", wEdges, source.select(col("node"), lit(0.0).as("dist")),
-      Nil, col("dist") + col("w"), rounds, fuse, Until.Rounds)
+      Nil, weighted = true, rounds, fuse, Until.Rounds)
       .select(col("node"), round(col("dist"), 6).as("dist"))
 
   /**
@@ -736,7 +797,7 @@ object Graph {
       maxRounds: Int = 64, fuse: Int = AutoFuse): DataFrame =
     relax("weightedShortestPathsConverged", wEdges,
       source.select(col("node"), lit(0.0).as("dist")),
-      Nil, col("dist") + col("w"), maxRounds, fuse, Until.Checksum)
+      Nil, weighted = true, maxRounds, fuse, Until.Checksum)
       .select(col("node"), round(col("dist"), 6).as("dist"))
 
   /**

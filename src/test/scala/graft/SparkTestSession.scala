@@ -45,4 +45,19 @@ object SparkTestSession {
   }
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /**
+   * Runs `body` with `spark.graft.broadcastNodes` set to `nodes`, the
+   * graph fixture's node count, so a graph fixpoint runs its
+   * DISTRIBUTED loop: every node-sized broadcast gate decides as it
+   * does under the default budget, while the fixture's edge rows
+   * exceed the budget of the edge-sized local finish (a connected
+   * symmetric graph of more than two nodes has more rows than nodes).
+   */
+  def distributedLoops[A](s: SparkSession, nodes: Long)(body: => A): A = {
+    val key = "spark.graft.broadcastNodes"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, nodes.toString)
+    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
 }

@@ -56,19 +56,28 @@ class FixpointSpec extends AnyFunSuite {
     (2L, 3L), (3L, 4L), (4L, 5L))
   private val k4chainCore = Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 1L, 5L -> 1L)
 
+  /** `body` under a `spark.graft.broadcastNodes` budget of `rows`. */
+  private def withBudget[A](rows: Long)(body: => A): A =
+    SparkTestSession.distributedLoops(spark, rows)(body)
+
+  /** The distributed loops, at the fixture's node count ([[SparkTestSession.distributedLoops]]). */
+  private def distributed[A](nodes: Long)(body: => A): A = withBudget(nodes)(body)
+
   private def longMap(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
 
   test("bfsDistances job count: fuse = 1 and fuse = 3") {
     val source = Seq(0L).toDF("node")
-    val (d1, j1) = jobsOf(longMap(Graph.bfsDistances(tree, source, maxDepth = 3, fuse = 1)))
-    val (d3, j3) = jobsOf(longMap(Graph.bfsDistances(tree, source, maxDepth = 3, fuse = 3)))
+    val (d1, j1) = distributed(8)(
+      jobsOf(longMap(Graph.bfsDistances(tree, source, maxDepth = 3, fuse = 1))))
+    val (d3, j3) = distributed(8)(
+      jobsOf(longMap(Graph.bfsDistances(tree, source, maxDepth = 3, fuse = 3))))
     assert(d1 === treeDist && d3 === treeDist)
     assert((j1, j3) === ((9, 8)))
   }
 
   test("kCore and kTruss job counts") {
-    val (core, jc) = jobsOf(longMap(Graph.kCore(k4chain, k = 3)))
+    val (core, jc) = distributed(6)(jobsOf(longMap(Graph.kCore(k4chain, k = 3))))
     assert(core === Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L))
     val k4tri = sym((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L),
       (2L, 3L), (3L, 4L), (3L, 5L), (4L, 5L))
@@ -78,8 +87,8 @@ class FixpointSpec extends AnyFunSuite {
   }
 
   test("coreness job count in the default and the frontier mode") {
-    val (cd, jd) = jobsOf(longMap(Graph.coreness(k4chain, adaptive = false)))
-    val (cf, jf) = jobsOf(longMap(Graph.coreness(k4chain, frontier = true)))
+    val (cd, jd) = distributed(6)(jobsOf(longMap(Graph.coreness(k4chain, adaptive = false))))
+    val (cf, jf) = distributed(6)(jobsOf(longMap(Graph.coreness(k4chain, frontier = true))))
     assert(cd === k4chainCore && cf === k4chainCore)
     assert((jd, jf) === ((5, 14)))
   }
@@ -91,6 +100,30 @@ class FixpointSpec extends AnyFunSuite {
     assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L))
     assert(j === 17)
+  }
+
+  test("local finish job counts: the materializations the loops run, plus one collect") {
+    val source = Seq(0L).toDF("node")
+    val wTree = tree.withColumn("w", lit(0.5))
+    val (b, jb) = jobsOf(longMap(Graph.bfsDistances(tree, source, maxDepth = 3)))
+    val (s, js) = jobsOf(Graph.weightedShortestPathsConverged(wTree, source).collect().length)
+    val (core, jk) = jobsOf(longMap(Graph.kCore(k4chain, k = 3)))
+    val (c, jc) = jobsOf(longMap(Graph.coreness(k4chain)))
+    assert(b === treeDist && s === 8 && core.keySet === Set(0L, 1L, 2L, 3L) && c === k4chainCore)
+    assert((jb, js, jk, jc) === ((3, 3, 2, 3)))
+  }
+
+  test("cut-over: one edge row above the budget runs the distributed loop, at its pinned count") {
+    val source = Seq(0L).toDF("node")
+    // tree: 14 edge rows; k4chain: 16
+    def bfs = jobsOf(longMap(Graph.bfsDistances(tree, source, maxDepth = 3, fuse = 1)))
+    val (local, jl) = withBudget(14)(bfs)
+    val (dist, jd) = withBudget(13)(bfs)
+    assert(local === treeDist && dist === treeDist)
+    assert((jl, jd) === ((3, 9)))
+    val (_, jk) = withBudget(15)(jobsOf(longMap(Graph.kCore(k4chain, k = 3))))
+    val (_, jc) = withBudget(15)(jobsOf(longMap(Graph.coreness(k4chain, adaptive = false))))
+    assert((jk, jc) === ((4, 5)))
   }
 
   test("missing-metric rule: 0 only on an empty block; a present metric runs no check") {
@@ -128,5 +161,18 @@ class FixpointSpec extends AnyFunSuite {
     assert(mains.nonEmpty)
     for (p <- mains; key <- deleted)
       assert(!read(p.toString).contains(key), s"$p reads the deleted key $key")
+  }
+
+  test("source audit: the graph kernels reach the driver only through the one bounded collect") {
+    def read(path: String) =
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
+    val driverCalls = Seq(".collect(", ".collectAsList(", "toLocalIterator", ".take(", ".head(")
+    for (file <- Seq("operators/Graph.scala", "core/LocalGraph.scala"); call <- driverCalls)
+      assert(!read(s"src/main/scala/graft/$file").contains(call),
+        s"$file calls $call: gather through Fixpoint.finishLocally")
+    val fixpoint = read("src/main/scala/graft/core/Fixpoint.scala")
+    assert(fixpoint.split(java.util.regex.Pattern.quote(".collect(")).length === 2,
+      "Fixpoint holds exactly one collect, the local finish's gather")
+    assert(!read("src/main/scala/graft/operators/Dedup.scala").contains("driverUnionFind"))
   }
 }

@@ -109,16 +109,20 @@ class MaterializeSpec extends AnyFunSuite {
     val embs = (0L until 120L).map(i =>
       (i, Array.tabulate(8)(d => math.sin(i * 0.37 + d).toFloat))).toDF("vec_id", "embedding")
 
+    // SSSP and BFS on their distributed loops (the checkpointed rounds
+    // are what this law covers), at the graph's node count
+    val nodes = sym.select("src").distinct().count()
+    def loops[A](body: => A): A = SparkTestSession.distributedLoops(spark, nodes)(body)
     def run() = (
       Dedup.dupClusters(edges, smallGraphEdges = 0).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-      Graph.weightedShortestPathsConverged(wEdges, source).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq,
+      loops(Graph.weightedShortestPathsConverged(wEdges, source).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq),
       Similarity.kmeansAssign(embs, k = 4, iters = 3)
         .select(col("id"), col("cl")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-      Graph.bfsDistances(sym, source, maxDepth = 4).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
+      loops(Graph.bfsDistances(sym, source, maxDepth = 4).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq),
       Graph.labelPropagation(sym, iters = 6, materializeEvery = 2).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
 

@@ -99,8 +99,9 @@ class RetrievalGraphSpec extends AnyFunSuite {
       // fuse = 1 isolates what this test pins — the checksum riding
       // the relax job itself — from round fusion (whose own law and
       // job-count effects the fusion-law test covers)
-      val out = Graph.weightedShortestPathsConverged(wEdges, source, fuse = 1)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+      val out = SparkTestSession.distributedLoops(spark, 4)(
+        Graph.weightedShortestPathsConverged(wEdges, source, fuse = 1)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap)
       assert(out === Map(0L -> 0.0, 1L -> 1.0, 2L -> 2.0, 3L -> 3.0))
       Thread.sleep(1000) // listener bus is async; let events drain
       // budget: 1 edge pre-partition + 1 initial materialize +
@@ -193,14 +194,16 @@ class RetrievalGraphSpec extends AnyFunSuite {
     val clique = for { i <- 0L until 20L; j <- (i + 1) until 20L } yield (i, j)
     val chain = (19L to 26L).sliding(2).map(s => (s(0), s(1))).toSeq
     val mix = sym((clique ++ chain): _*)
-    val pureDefault = Graph.coreness(mix, adaptive = false).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    // on the distributed loops (the escape is theirs), at the 27-node count
+    def loops[A](body: => A): A = SparkTestSession.distributedLoops(spark, 27)(body)
+    val pureDefault = loops(Graph.coreness(mix, adaptive = false).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap)
     assert(pureDefault(0L) === 19L && pureDefault(26L) === 1L)
     val spark2 = mix.sparkSession
     spark2.conf.set("spark.graft.coreness.escapeRounds", "2")
     try {
-      val escaped = Graph.coreness(mix).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      val escaped = loops(Graph.coreness(mix).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap)
       assert(escaped === pureDefault)
     } finally spark2.conf.unset("spark.graft.coreness.escapeRounds")
     // escapeRounds=0 law (regression): with a zero budget the default
@@ -209,8 +212,8 @@ class RetrievalGraphSpec extends AnyFunSuite {
     // convergence and emitted raw degrees as coreness
     spark2.conf.set("spark.graft.coreness.escapeRounds", "0")
     try {
-      val zeroBudget = Graph.coreness(mix).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      val zeroBudget = loops(Graph.coreness(mix).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap)
       assert(zeroBudget === pureDefault)
     } finally spark2.conf.unset("spark.graft.coreness.escapeRounds")
     // k-truss on K4 + a lone triangle hanging off node 3 (3-4-5
@@ -345,8 +348,9 @@ class RetrievalGraphSpec extends AnyFunSuite {
     val wEdges = (raw ++ raw.map(t => (t._2, t._1, t._3))).toDF("src", "dst", "w")
     val edges = wEdges.select("src", "dst")
     val src = Seq(0L).toDF("node")
-    def sort(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
+    // on the distributed loops (fusion is theirs), at the 6-node count
+    def sort(df: => org.apache.spark.sql.DataFrame) = SparkTestSession.distributedLoops(spark, 6)(
+      df.collect().map(_.toString).sorted.toSeq)
     assert(sort(Graph.bfsDistances(edges, src, maxDepth = 5, fuse = 3))
       === sort(Graph.bfsDistances(edges, src, maxDepth = 5, fuse = 1)))
     val srcs = Seq(0L, 3L).toDF("node")
