@@ -92,6 +92,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_ONLY=name1,name2 restricts the run (local iteration aid)
+    val onlyEnv = sys.env.get("SPARK_GRAFT_ONLY")
+    val only = graft.queries.Queries.selected(onlyEnv)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_MASTER=local-cluster[w,c,mem] times the sweep with
     // forked executor JVMs (the Verify.scala multi-process discipline):
@@ -120,14 +123,12 @@ object Bench {
 
     Tables.t(spark, sfDir, "lineitem").count() // session/codegen warm-up
 
-    // SPARK_GRAFT_ONLY=name1,name2 restricts the run (local iteration aid)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // min-of-3 default: the virtualized host shows multi-x run-to-run
     // noise (straggler stages with near-idle CPU); the min is the
     // engine's number, and one extra rep rejects much more of it
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => only(n) }
     // min of `reps` WHOLE-SUITE passes (not back-to-back per-query reps):
     // the host's noise bursts last minutes, so consecutive reps of one
     // query can all land inside a burst and its min stays inflated.
@@ -232,7 +233,7 @@ object Bench {
     // only a FULL run may overwrite the committed record: a restricted
     // (SPARK_GRAFT_ONLY) iteration run clobbering BENCH_full.json kept
     // leaving partial records for `git checkout` to undo
-    if (only.isEmpty)
+    if (onlyEnv.isEmpty)
       try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_full.json"),
         (fullLine + "\n").getBytes("UTF-8"))
       catch { case e: Exception => System.err.println(s"[bench] full-record write failed: $e") }

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY=name1,name2 restricts the dump (local iteration aid)
+    val only = graft.queries.Queries.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[2,2,2048] runs the whole dump
     // multi-process: executors are forked JVMs, so every custom
@@ -33,10 +35,8 @@ object Verify {
       if (f.isDirectory) f.listFiles().foreach(rmTree)
       f.delete(); ()
     }
-    // SPARK_GRAFT_ONLY=name1,name2 restricts the dump (local iteration aid)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => only(n) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

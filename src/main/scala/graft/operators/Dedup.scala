@@ -532,19 +532,15 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val spark = newDocs.sparkSession
-    val rowsPerBand = k / bands
     // batch-side frames are batch-sized: materialize them once
     // (localCheckpoint) — they are each consumed by several jobs
-    // below, and recomputing them would rescan the batch input
-    val newSh = newDocs.select(col(idCol).as("new_id"),
-      shingle_hashes(col(textCol), shingleN).as("new_sh"))
+    // below, and recomputing them would rescan the batch input. The
+    // same helpers build the index, so probes band exactly as it does.
+    val newSh = shingleRows(newDocs, shingleN, textCol, idCol)
+      .withColumnRenamed("id", "new_id").withColumnRenamed("sh_set", "new_sh")
       .localCheckpoint()
-    val newBands = newDocs
-      .select(col(idCol).as("new_id"), minhash_doc(col(textCol), shingleN, k).as("sig"))
-      .select(col("new_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
-      .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_hash")
+    val newBands = bandRows(newDocs, k, bands, shingleN, textCol, idCol)
+      .withColumnRenamed("id", "new_id")
       .localCheckpoint()
     val batchHashes = boundedCollect(
       newBands.select("band_hash").distinct(), 1024)(_.getLong(0))

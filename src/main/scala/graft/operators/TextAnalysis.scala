@@ -13,9 +13,9 @@ import graft.functions.TextFunctions._
  * pipeline inside one stage and scale linearly.
  *
  * Every heuristic is deterministic and oracle-expressible where the
- * function surface allows (see SparkEntry.oracleSql); the hash-based
- * fingerprints are deterministic but engine-specific (rows-only
- * verification).
+ * function surface allows (see the oracles in
+ * `graft.queries.TextQueries`); the hash-based fingerprints are
+ * deterministic but engine-specific (rows-only verification).
  */
 object TextAnalysis {
 

@@ -65,8 +65,8 @@ object MRRecord {
  *
  * NOTE on scale: this facade is record-at-a-time (typed lambdas), the
  * parity surface for reference users. Relational/analytic workloads
- * should use the DataFrame surface (graft.operators / SparkEntry
- * queries), which stays inside Catalyst codegen.
+ * should use the DataFrame surface (graft.operators, as the query
+ * bodies in graft.queries do), which stays inside Catalyst codegen.
  */
 final class ExecutionBuilder[R] private (
     val spark: SparkSession,

@@ -29,24 +29,7 @@ import graft.core.ClusterHarness
  * cannot straddle a rounding boundary.
  */
 class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  /** Query → the custom serializable it forces across the wire. */
-  private val Cover = Seq(
-    "text_bpe_table",    // BpeSegmentExpr driver-built merge-table object
-    "emb_pca",           // MomentAgg O(d²) moment buffer
-    "graph_coreness",    // HIndex histogram buffer + iterative observe loop
-    "stream_kmv",        // BottomKDistinct bottom-k buffer
-    "lmr_error_channel", // Env[R] envelope encoders
-    "q_keys_source",     // DSv2 KeysSource partitions + prefix/column pushdown
-    "q_keys_groupcount", // KeysSource GROUP BY slot aggregate pushdown
-    "q_topk_custom",     // TopKPerKey custom SparkPlan (strategy-injected)
-    "lmr_reshuffle_etl", // CRC16-slot repartition + hashtag routing
-    "graph_kcore",       // localCheckpoint blocks held on remote executors
-    "text_lm_score",     // TokenScoreMeanExpr HashMap[UTF8String,Double] reference
-    "ann_ivfpq")         // TopCentroidsExpr + PqCodesExpr matrix/codebook references
-
-  /** Cover entries whose graph fixpoint must run its distributed loop. */
-  private val DistributedGraphs = Set("graph_coreness", "graph_kcore")
+  import LocalClusterSpec._
 
   private var clusterRows: Map[String, Vector[Seq[Any]]] = Map.empty
   private var executorPids: Set[String] = Set.empty
@@ -191,4 +174,25 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rowsEq(rows, local),
         s"$name: cluster rows != local rows\ncluster: ${rows.take(5)}\nlocal: ${local.take(5)}")
     }
+}
+
+object LocalClusterSpec {
+
+  /** Query → the custom serializable it forces across the wire. */
+  private[graft] val Cover = Seq(
+    "text_bpe_table",    // BpeSegmentExpr driver-built merge-table object
+    "emb_pca",           // MomentAgg O(d²) moment buffer
+    "graph_coreness",    // HIndex histogram buffer + iterative observe loop
+    "stream_kmv",        // BottomKDistinct bottom-k buffer
+    "lmr_error_channel", // Env[R] envelope encoders
+    "q_keys_source",     // DSv2 KeysSource partitions + prefix/column pushdown
+    "q_keys_groupcount", // KeysSource GROUP BY slot aggregate pushdown
+    "q_topk_custom",     // TopKPerKey custom SparkPlan (strategy-injected)
+    "lmr_reshuffle_etl", // CRC16-slot repartition + hashtag routing
+    "graph_kcore",       // localCheckpoint blocks held on remote executors
+    "text_lm_score",     // TokenScoreMeanExpr HashMap[UTF8String,Double] reference
+    "ann_ivfpq")         // TopCentroidsExpr + PqCodesExpr matrix/codebook references
+
+  /** Cover entries whose graph fixpoint must run its distributed loop. */
+  private[graft] val DistributedGraphs = Set("graph_coreness", "graph_kcore")
 }
