@@ -206,6 +206,98 @@ private[graft] object LocalGraph {
     Some(Fix(keep.map(ix.ids), keep.map(cur), rounds))
   }
 
+  /**
+   * PageRank's power iteration, plain (`seeds` None) or personalized.
+   * The start set is the distinct srcs (plain) or the distinct seeds,
+   * each ranked 1 / its size; a round sums rank/outdeg over the rows
+   * out of the current set (outdeg counts rows), and its nodes are the
+   * dsts those rows reach, plus every seed (the personalized round's
+   * full outer join). A node ranks `d · contrib + restart`, where
+   * `restart` is (1 − d) / size for every node (plain) or for seeds
+   * only, the joins' arithmetic: IEEE addition commutes, so this is
+   * the plain round's `(1 − d) / N + d · contrib` too. Only the
+   * per-node summation order differs from the distributed aggregate.
+   */
+  def pagerank(src: Array[Long], dst: Array[Long], seeds: Option[Array[Long]], iters: Int,
+      damping: Double): (Array[Long], Array[Double]) = {
+    val ix = new Index(Seq(src, dst) ++ seeds: _*)
+    val s = ix.of(src)
+    val d = ix.of(dst)
+    val n = ix.size
+    val outdeg = new Array[Long](n)
+    s.foreach(v => outdeg(v) += 1)
+    val seed = new Array[Boolean](n)
+    seeds.fold(s)(ix.of).foreach(seed(_) = true)
+    val size = seed.count(identity)
+    val restart = (1.0 - damping) / size
+    var live = seed.clone()
+    var rank = Array.fill(n)(1.0 / size)
+    for (_ <- 1 to iters) {
+      val contrib = new Array[Double](n)
+      val reached = if (seeds.isEmpty) new Array[Boolean](n) else seed.clone()
+      var i = 0
+      while (i < s.length) {
+        val u = s(i)
+        if (live(u)) { contrib(d(i)) += rank(u) / outdeg(u); reached(d(i)) = true }
+        i += 1
+      }
+      rank = Array.tabulate(n)(v =>
+        damping * contrib(v) + (if (seed(v) || seeds.isEmpty) restart else 0.0))
+      live = reached
+    }
+    val keep = (0 until n).filter(live).toArray
+    (keep.map(ix.ids), keep.map(rank))
+  }
+
+  /**
+   * Synchronous label propagation: every src starts labelled with its
+   * own id; a round gives each dst reached by rows out of the current
+   * set the most frequent label over those rows (duplicates and
+   * self-loops count), the smallest label on a tie, as
+   * `mode(label, deterministic = true)` does. Nodes no such row reaches
+   * drop out, as they do from the round's join.
+   */
+  def labelPropagation(src: Array[Long], dst: Array[Long], iters: Int): (Array[Long], Array[Long]) = {
+    val ix = new Index(src, dst)
+    val s = ix.of(src)
+    val n = ix.size
+    val in = new Csr(n, ix.of(dst))
+    // labels are node ids, kept as dense indexes: same order
+    var label = Array.tabulate(n)(identity)
+    var live = new Array[Boolean](n)
+    s.foreach(live(_) = true)
+    val buf = new Array[Int](s.length)
+    for (_ <- 1 to iters) {
+      val next = new Array[Int](n)
+      val reached = new Array[Boolean](n)
+      for (v <- 0 until n) {
+        var m = 0
+        for (i <- in.off(v) until in.off(v + 1)) {
+          val u = s(in.row(i))
+          if (live(u)) { buf(m) = label(u); m += 1 }
+        }
+        if (m > 0) {
+          java.util.Arrays.sort(buf, 0, m)
+          var best = buf(0)
+          var bestRun = 0
+          var j = 0
+          while (j < m) {
+            var k = j
+            while (k < m && buf(k) == buf(j)) k += 1
+            if (k - j > bestRun) { best = buf(j); bestRun = k - j }
+            j = k
+          }
+          next(v) = best
+          reached(v) = true
+        }
+      }
+      label = next
+      live = reached
+    }
+    val keep = (0 until n).filter(live).toArray
+    (keep.map(ix.ids), keep.map(v => ix.ids(label(v))))
+  }
+
   /** Connected components of a symmetric edge list: every node with
     * the minimum id of its component (path-halving union-find whose
     * union keeps the smaller root, so a root is its component's

@@ -318,8 +318,6 @@ object Dedup {
       threshold: Double = 0.7, shingleN: Int = 5,
       textCol: String = "text", idCol: String = "doc_id",
       maxBucket: Int = 10000): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val rowsPerBand = k / bands
     // signatures AND shingle sets are scan-stage expressions — no
     // shuffle until the band self-join
     val shingleSets = docs.select(col(idCol).as("id"),
@@ -332,8 +330,7 @@ object Dedup {
     // an oversized band bucket collapse its identical-signature mass
     // into stars instead of dropping it (pairsFromBucketsRefined)
     val bandz = sigs.select(col("id"), xxhash64(col("sig")).as("rk"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
+        bandHashes(col("sig"), k, bands))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_hash")
     val cand = pairsFromBucketsRefined(bandz, Seq("band_idx", "band_hash"), "rk",
       maxBucket = maxBucket)
@@ -436,18 +433,23 @@ object Dedup {
     m => if (g == 0) s"${table}_$m" else s"${table}_${m}_g$g"
   }
 
-  /** (id, band_idx, band_hash) rows for the index's candidate side. */
-  private def bandRows(docs: DataFrame, k: Int, bands: Int, shingleN: Int,
-      textCol: String, idCol: String): DataFrame = {
+  /** The LSH bands of a k-long MinHash signature as a (pos, col)
+    * generator: band b is the xxhash64 of signature slots
+    * b·k/bands + 1 .. (b + 1)·k/bands. */
+  private def bandHashes(sig: Column, k: Int, bands: Int): Column = {
     require(k % bands == 0, "bands must divide k")
     val rowsPerBand = k / bands
+    posexplode(transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)))))
+  }
+
+  /** (id, band_idx, band_hash) rows for the index's candidate side. */
+  private def bandRows(docs: DataFrame, k: Int, bands: Int, shingleN: Int,
+      textCol: String, idCol: String): DataFrame =
     docs
       .select(col(idCol).as("id"), minhash_doc(col(textCol), shingleN, k).as("sig"))
-      .select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
+      .select(col("id"), bandHashes(col("sig"), k, bands))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_hash")
-  }
 
   /** (id, sh_set) rows for the index's verification side. */
   private def shingleRows(docs: DataFrame, shingleN: Int,

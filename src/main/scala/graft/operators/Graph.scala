@@ -55,7 +55,9 @@ object Graph {
    * round re-exchanges the edge side — only label-sized rows move.
    * Label rounds stay lazy at small `iters` (one job, no sync
    * barriers) but are materialized every `materializeEvery` rounds so
-   * deep runs don't nest the plan linearly in the round count.
+   * deep runs don't nest the plan linearly in the round count. A graph
+   * whose edge rows fit [[Fixpoint.broadcastMaxRows]] runs the rounds
+   * on the driver instead ([[LocalGraph.labelPropagation]]).
    */
   def labelPropagation(edges0: DataFrame, iters: Int = 3,
       materializeEvery: Int = 5): DataFrame = {
@@ -68,22 +70,30 @@ object Graph {
     // slower at sf0.1 (1.56 → 1.91 s same-JVM A/B; each mid-plan
     // broadcast is a driver barrier). The frontier loops only gate
     // frames already materialized by their own round jobs.
-    val edges = edges0.repartition(col("src")).materializeRound
-    var labels = edges.select(col("src").as("node")).distinct()
+    // The edge-row count rides the checkpoint job, for the local finish.
+    val edgeStep = Fixpoint.materialize("labelPropagation", edges0.repartition(col("src")),
+      Seq(Fixpoint.rowCount))
+    val edges = edgeStep.state
+    val seed = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-    for (i <- 1 to iters) {
-      // one shuffle per round: mode(deterministic = true) is the
-      // neighbor-label mode with the lowest label on frequency ties —
-      // exactly the (count desc, label asc) argmax, but as a single
-      // aggregate (map-side partial label→count maps combine before
-      // the exchange) instead of a count shuffle + an argmax shuffle
-      labels = edges.join(labels, edges("src") === labels("node"))
+    // one shuffle per round: mode(deterministic = true) is the
+    // neighbor-label mode with the lowest label on frequency ties —
+    // exactly the (count desc, label asc) argmax, but as a single
+    // aggregate (map-side partial label→count maps combine before
+    // the exchange) instead of a count shuffle + an argmax shuffle
+    def round(labels: DataFrame): DataFrame =
+      edges.join(labels, edges("src") === labels("node"))
         .groupBy(col("dst").as("node2"))
         .agg(mode(col("label"), deterministic = true).as("label"))
         .select(col("node2").as("node"), col("label"))
-      if (i % materializeEvery == 0 && i < iters) labels = labels.materializeRound
-    }
-    labels
+    Fixpoint.finishLocally(edgeStep.metrics("n"), Fixpoint.broadcastMaxRows(edges),
+        edges.select("src", "dst")) { case Seq(Array(src, dst)) =>
+      val (ids, labels) = LocalGraph.labelPropagation(src, dst, iters)
+      Some(kernelRows(if (iters == 0) seed else round(seed), ids, labels))
+    }.getOrElse((1 to iters).foldLeft(seed) { (labels, i) =>
+      val next = round(labels)
+      if (i % materializeEvery == 0 && i < iters) next.materializeRound else next
+    })
   }
 
   /**
@@ -480,7 +490,7 @@ object Graph {
       case Seq(Array(src, dst)) =>
         val fix = LocalGraph.kCore(src, dst, k, maxIters)
         Fixpoint.requireConverged("kCore", fix.rounds <= maxIters, maxIters)
-        Some(peel(degrees).schema -> fix.ids.indices.map(i => Row(fix.ids(i), fix.values(i))))
+        Some(kernelRows(peel(degrees), fix.ids, fix.values))
     }.getOrElse {
       val seed = Fixpoint.materialize("kCore", degrees, Seq(Fixpoint.rowCount))
       Fixpoint.run("kCore", seed, maxIters, Fixpoint.FuseRounds, Seq(Fixpoint.rowCount),
@@ -703,7 +713,7 @@ object Graph {
           if (useFrontier) frontierRound(seed.state, seed.state.select("node"), edges)
           else if (fix.rounds <= budget) default
           else frontierRound(base, base.select("node"), edges)
-        state.select("node", "c").schema -> fix.ids.indices.map(i => Row(fix.ids(i), fix.values(i)))
+        kernelRows(state.select("node", "c"), fix.ids, fix.values)
       }
     }.getOrElse(distributed()).select(col("node"), col("c").as("coreness"))
   }
@@ -712,16 +722,29 @@ object Graph {
    * PageRank with a fixed iteration count over a symmetric edge list
    * (columns src, dst): rank_{t+1}(v) = (1-d)/N + d·Σ_{u→v}
    * rank_t(u)/outdeg(u). Symmetric edges mean no dangling nodes, so
-   * no redistribution term. Fixed iterations (not convergence
-   * detection) keep the whole computation ONE lazy plan: the edge
-   * exchange subtree is identical in every iteration, so Spark's
+   * no redistribution term.
+   *
+   * The call runs one job: it materialises (src, dst) with its row
+   * count observed on that job. A graph whose edge rows fit
+   * [[Fixpoint.broadcastMaxRows]] then finishes on the driver
+   * ([[LocalGraph.pagerank]]: the same rounds over the same edge-row
+   * multiset, one more job for the gather). Above the budget, the k
+   * iterations form ONE lazy plan over the materialised edges: the
+   * edge exchange subtree is identical in every iteration, so Spark's
    * ReuseExchange materializes it once — the probe shows 3 iterations
    * cost ~1 edge shuffle plus 3 rank-sized ones.
    *
    * Ranks are rounded to 8 decimals at the end only; intermediate
    * arithmetic is raw doubles (same in the DuckDB oracle).
    */
-  def pagerank(edges: DataFrame, iters: Int = 3, damping: Double = 0.85): DataFrame = {
+  def pagerank(edges: DataFrame, iters: Int = 3, damping: Double = 0.85): DataFrame =
+    rounded(pagerankRanks(edges, iters, damping))
+
+  /** [[pagerank]] before its final rounding. */
+  private[graft] def pagerankRanks(edges0: DataFrame, iters: Int, damping: Double): DataFrame = {
+    val edgeStep = Fixpoint.materialize("pagerank", edges0.select(col("src"), col("dst")),
+      Seq(Fixpoint.rowCount))
+    val edges = edgeStep.state
     // outdeg is edge-sized but aggregates to node-sized; it is reused
     // every iteration, so pre-join it onto the edges once: the
     // per-iteration join then carries (src, dst, outdeg) rows and the
@@ -734,18 +757,29 @@ object Graph {
     // materialization barrier, and the node-count subtree is
     // exchange-reused too. Symmetric edges ⇒ src covers every node.
     val n = edges.agg(countDistinct(col("src")).as("n_nodes"))
-    var ranks = deg.crossJoin(n)
+    val seed = deg.crossJoin(n)
       .select(col("src").as("node"), (lit(1.0) / col("n_nodes")).as("rank"))
-    for (_ <- 1 to iters) {
-      ranks = edgesDeg.join(ranks, edgesDeg("src") === ranks("node"))
+    def round(ranks: DataFrame): DataFrame =
+      edgesDeg.join(ranks, edgesDeg("src") === ranks("node"))
         .groupBy(col("dst").as("node2"))
         .agg(sum(col("rank") / col("outdeg")).as("contrib"))
         .crossJoin(n)
         .select(col("node2").as("node"),
           (lit(1.0 - damping) / col("n_nodes") + lit(damping) * col("contrib")).as("rank"))
-    }
-    ranks.select(col("node"), round(col("rank"), 8).as("rank"))
+    Fixpoint.finishLocally(edgeStep.metrics("n"), Fixpoint.broadcastMaxRows(edges), edges) {
+      case Seq(Array(src, dst)) =>
+        val (ids, ranks) = LocalGraph.pagerank(src, dst, None, iters, damping)
+        Some(kernelRows(if (iters == 0) seed else round(seed), ids, ranks))
+    }.getOrElse((1 to iters).foldLeft(seed)((ranks, _) => round(ranks)))
   }
+
+  private def rounded(ranks: DataFrame): DataFrame =
+    ranks.select(col("node"), round(col("rank"), 8).as("rank"))
+
+  /** A local kernel's per-node values as rows of `state`'s schema: the
+    * distributed state the loop would have produced, planned, never run. */
+  private def kernelRows(state: DataFrame, ids: Array[Long], values: Array[_]) =
+    state.schema -> ids.indices.map(i => Row(ids(i), values(i)))
 
   /**
    * Weighted single-source shortest paths, Bellman–Ford shape: each
@@ -809,26 +843,44 @@ object Graph {
    * broadcast one-row aggregates); the per-round full-outer join
    * keeps contribution-less seeds alive (their restart mass never
    * disappears) and the seed set is bounded, so its side broadcasts.
+   * Like [[pagerank]], the call materialises its edges, and also its
+   * distinct seeds, each with its row count, and finishes on the driver
+   * when both fit [[Fixpoint.broadcastMaxRows]].
    */
   def personalizedPagerank(edges: DataFrame, seeds: DataFrame,
-      iters: Int = 3, damping: Double = 0.85): DataFrame = {
+      iters: Int = 3, damping: Double = 0.85): DataFrame =
+    rounded(personalizedPagerankRanks(edges, seeds, iters, damping))
+
+  /** [[personalizedPagerank]] before its final rounding. */
+  private[graft] def personalizedPagerankRanks(edges0: DataFrame, seeds: DataFrame,
+      iters: Int, damping: Double): DataFrame = {
+    val edgeStep = Fixpoint.materialize("personalizedPagerank",
+      edges0.select(col("src"), col("dst")), Seq(Fixpoint.rowCount))
+    val edges = edgeStep.state
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val edgesDeg = edges.join(deg, "src").repartition(col("src"))
-    val seedSet = seeds.select(col("node").as("_seed")).distinct()
+    val seedStep = Fixpoint.materialize("personalizedPagerank",
+      seeds.select(col("node").as("_seed")).distinct(), Seq(Fixpoint.rowCount))
+    val seedSet = seedStep.state
     val ns = seedSet.agg(count(lit(1)).as("n_seeds"))
-    var ranks = seedSet.crossJoin(ns)
+    val seed = seedSet.crossJoin(ns)
       .select(col("_seed").as("node"), (lit(1.0) / col("n_seeds")).as("rank"))
-    for (_ <- 1 to iters) {
+    def round(ranks: DataFrame): DataFrame = {
       val contrib = edgesDeg.join(ranks, edgesDeg("src") === ranks("node"))
         .groupBy(col("dst").as("node2"))
         .agg(sum(col("rank") / col("outdeg")).as("contrib"))
-      ranks = contrib.join(seedSet, col("node2") === col("_seed"), "full_outer")
+      contrib.join(seedSet, col("node2") === col("_seed"), "full_outer")
         .crossJoin(ns)
         .select(coalesce(col("node2"), col("_seed")).as("node"),
           (lit(damping) * coalesce(col("contrib"), lit(0.0)) +
             when(col("_seed").isNotNull, lit(1.0 - damping) / col("n_seeds"))
               .otherwise(lit(0.0))).as("rank"))
     }
-    ranks.select(col("node"), round(col("rank"), 8).as("rank"))
+    Fixpoint.finishLocally(math.max(edgeStep.metrics("n"), seedStep.metrics("n")),
+        Fixpoint.broadcastMaxRows(edges), edges, seedSet) {
+      case Seq(Array(src, dst), Array(nodes)) =>
+        val (ids, ranks) = LocalGraph.pagerank(src, dst, Some(nodes), iters, damping)
+        Some(kernelRows(if (iters == 0) seed else round(seed), ids, ranks))
+    }.getOrElse((1 to iters).foldLeft(seed)((ranks, _) => round(ranks)))
   }
 }

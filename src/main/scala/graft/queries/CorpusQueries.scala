@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.core.Materialize.MaterializeOps
 import graft.functions.TextFunctions._
 import graft.operators.{Curation, Dedup, TextAnalysis}
 import graft.queries.OracleSql._
@@ -789,7 +790,7 @@ private[queries] object CorpusQueries {
       // the pair set feeds BOTH the cluster build and the leakage joins
       // — materialize once or the shingle/jaccard generation runs twice
       val pairs = Dedup.ngramJaccardPairs(docs, n = 5, threshold = 0.7)
-        .localCheckpoint()
+        .materializeRound
       val clusters = Dedup.dupClusters(pairs)
       pairs
         .join(clusters.select(col("doc_id").as("a_id"), col("cluster_id").as("c_a")), "a_id")

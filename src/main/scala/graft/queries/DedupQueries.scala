@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.core.Materialize.MaterializeOps
 import graft.operators.{BloomJoin, Dedup, Similarity, TextAnalysis}
 import graft.queries.OracleSql._
 
@@ -791,7 +792,7 @@ private[queries] object DedupQueries {
           col("a.blk") === col("b.blk") && col("a.c_custkey") < col("b.c_custkey"))
         .select(Seq(col("a.c_custkey").as("a_id"), col("b.c_custkey").as("b_id")) ++
           agreeCols: _*)
-        .localCheckpoint()
+        .materializeRound
       val em = Dedup.emFromCombos(
         pairs.groupBy("ag_0", "ag_1", "ag_2").agg(count(lit(1)).as("n_pairs")),
         k = fields.size, iters = 5)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.core.Materialize.MaterializeOps
 import graft.operators.Graph
 
 /**
@@ -57,9 +58,11 @@ private[queries] object GraphQueries {
       s"FROM e JOIN $in ON e.src = $in.node JOIN deg ON e.src = deg.src " +
       "GROUP BY e.dst) c FULL OUTER JOIN sd ON c.node = sd.node, ns), "
 
-  /** One Bellman–Ford relaxation round as a chained CTE: keep ∪ relax, min per node. */
+  /** One Bellman–Ford relaxation round as a chained CTE: keep ∪ relax, min per node.
+    * MATERIALIZED because the round reads `in` twice: an inlined chain
+    * of k rounds plans about 2^k copies of the seed. */
   private def ssspIter(out: String, in: String): String =
-    s"$out AS (SELECT node, min(dist) AS dist FROM (" +
+    s"$out AS MATERIALIZED (SELECT node, min(dist) AS dist FROM (" +
       s"SELECT node, dist FROM $in UNION ALL " +
       s"SELECT ew.dst AS node, $in.dist + ew.w AS dist " +
       s"FROM ew JOIN $in ON ew.src = $in.node) GROUP BY node), "
@@ -299,7 +302,7 @@ private[queries] object GraphQueries {
     Query("graph_modularity", (s, dir) => {
       val li = t(s, dir, "lineitem").filter(col("l_orderkey") % 10 === 0)
       val edges = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-        .localCheckpoint() // feeds LPA AND the modularity aggregates
+        .materializeRound // feeds LPA AND the modularity aggregates
       Graph.modularity(edges, Graph.labelPropagation(edges))
     },
       // the same LPA chain + Newman Q: intra/degree sums are exact

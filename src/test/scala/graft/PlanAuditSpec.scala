@@ -17,6 +17,13 @@ class PlanAuditSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, SparkTestSession.sfDir)
       .queryExecution.executedPlan.toString
 
+  /** `body` on the graph queries' distributed loops: a budget of the
+    * co-occurrence graph's node count (PageRank ranks every node once). */
+  private def distributedGraph[A](body: => A): A =
+    SparkTestSession.distributedLoops(spark, graphNodes)(body)
+  private lazy val graphNodes =
+    SparkEntry.queries("graph_pagerank")(spark, SparkTestSession.sfDir).count()
+
   test("q1_pricing: aggregate with pruned scan (no orderkey read)") {
     val p = plan("q1_pricing")
     assert(p.contains("HashAggregate"))
@@ -205,12 +212,14 @@ class PlanAuditSpec extends AnyFunSuite {
     // exchange reuse is an AQE runtime decision: execute THIS plan
     // (collect, not count — count wraps a new plan) and audit the
     // final adaptive plan
-    val df = SparkEntry.queries("graph_pagerank")(spark, SparkTestSession.sfDir)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("isFinalPlan=true"))
-    assert("ReusedExchange".r.findAllIn(p).size >= 4,
-      s"edge/degree exchanges not reused across pagerank iterations:\n${p.take(4000)}")
+    distributedGraph {
+      val df = SparkEntry.queries("graph_pagerank")(spark, SparkTestSession.sfDir)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("isFinalPlan=true"))
+      assert("ReusedExchange".r.findAllIn(p).size >= 4,
+        s"edge/degree exchanges not reused across pagerank iterations:\n${p.take(4000)}")
+    }
   }
 
   test("text_bpe_apply: segmentation is a shuffle-free scan (merge table rides the plan)") {
@@ -226,19 +235,21 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("graph_communities: edges partitioned once — no per-round edge exchange") {
-    val df = SparkEntry.queries("graph_communities")(spark, SparkTestSession.sfDir)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("isFinalPlan=true"))
-    // the edge list (keyed by src) is hash-partitioned at checkpoint
-    // time; every label round must consume it in place — label-sized
-    // rows may shuffle each round, edge-sized rows may not
-    assert(!p.contains("Exchange hashpartitioning(src"),
-      s"edge side re-exchanged inside the label-propagation rounds:\n${p.take(4000)}")
-    // one aggregate exchange per round (deterministic-mode fuses the
-    // count and argmax shuffles) + init + census
-    assert("Exchange hashpartitioning".r.findAllIn(p).size <= 10,
-      s"unbounded exchange growth across LPA rounds:\n${p.take(4000)}")
+    distributedGraph {
+      val df = SparkEntry.queries("graph_communities")(spark, SparkTestSession.sfDir)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("isFinalPlan=true"))
+      // the edge list (keyed by src) is hash-partitioned at checkpoint
+      // time; every label round must consume it in place — label-sized
+      // rows may shuffle each round, edge-sized rows may not
+      assert(!p.contains("Exchange hashpartitioning(src"),
+        s"edge side re-exchanged inside the label-propagation rounds:\n${p.take(4000)}")
+      // one aggregate exchange per round (deterministic-mode fuses the
+      // count and argmax shuffles) + init + census
+      assert("Exchange hashpartitioning".r.findAllIn(p).size <= 10,
+        s"unbounded exchange growth across LPA rounds:\n${p.take(4000)}")
+    }
   }
 
   test("q_zorder_sink: both box predicates are pushed to the z-clustered scan") {
@@ -492,7 +503,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("graph_ppr / graph_sssp: frontier-sized state, no product joins") {
-    val p1 = plan("graph_ppr")
+    val p1 = distributedGraph(plan("graph_ppr"))
     assert(!p1.contains("CartesianProduct"), "PPR degenerated into a product join")
     // the two one-row count frames (N, |S|) may ride BroadcastNestedLoopJoin
     // (that IS the broadcast of a 1-row side); anything bigger may not

@@ -126,6 +126,19 @@ class FixpointSpec extends AnyFunSuite {
     assert((jk, jc) === ((4, 5)))
   }
 
+  test("pagerank, personalized pagerank and label propagation: local and cut-over job counts") {
+    val seeds = Seq(0L, 4L).toDF("node")
+    def pr = jobsOf(Graph.pagerank(k4chain).collect().length)
+    val (p, jp) = pr
+    val (q, jq) = jobsOf(Graph.personalizedPagerank(k4chain, seeds).collect().length)
+    val (l, jl) = jobsOf(longMap(Graph.labelPropagation(k4chain)).size)
+    assert((p, q, l) === ((6, 6, 6)))
+    assert((jp, jq, jl) === ((2, 3, 2)))
+    // k4chain has 16 edge rows: the edge materialisation, then the lazy plan
+    val (pd, jd) = withBudget(15)(pr)
+    assert(pd === 6 && jd === 5)
+  }
+
   test("missing-metric rule: 0 only on an empty block; a present metric runs no check") {
     val empty = spark.range(0).toDF()
     val nonEmpty = spark.range(10).toDF()

@@ -36,7 +36,23 @@ class LocalFinishSpec extends AnyFunSuite {
 
   /** `op` on `edges` is local under the default budget and equal, in rows
     * and schema, to its distributed loop at budget 0 and at the node count. */
-  private def law(name: String, edges: DataFrame)(op: => DataFrame): Unit = {
+  private def law(name: String, edges: DataFrame)(op: => DataFrame): Unit =
+    lawWith(name, edges, op)((budget, local, dist) =>
+      assert(rows(local) === rows(dist), s"$name: rows differ at budget $budget"))
+
+  /** [[law]] for ranks: the same nodes and schema, and every rank within
+    * 1e-12 (a rank is a sum whose order is the partitioning's). */
+  private def rankLaw(name: String, edges: DataFrame)(op: => DataFrame): Unit =
+    lawWith(name, edges, op) { (budget, local, dist) =>
+      def ranks(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val (l, d) = (ranks(local), ranks(dist))
+      assert(l.keySet === d.keySet, s"$name: nodes differ at budget $budget")
+      for ((v, r) <- l)
+        assert(math.abs(r - d(v)) <= 1e-12, s"$name: node $v ranks $r vs ${d(v)} at budget $budget")
+    }
+
+  private def lawWith(name: String, edges: DataFrame, op: => DataFrame)(
+      same: (Long, DataFrame, DataFrame) => Unit): Unit = {
     val n = edges.select("src").union(edges.select("dst")).distinct().count()
     val local = op
     assert(isLocal(local), s"$name: the default budget did not finish locally")
@@ -44,7 +60,7 @@ class LocalFinishSpec extends AnyFunSuite {
       val dist = withBudget(Some(budget))(op)
       assert(!isLocal(dist), s"$name: budget $budget did not run the loop")
       assert(local.schema === dist.schema, s"$name: schema differs at budget $budget")
-      assert(rows(local) === rows(dist), s"$name: rows differ at budget $budget")
+      same(budget, local, dist)
     }
   }
 
@@ -70,6 +86,10 @@ class LocalFinishSpec extends AnyFunSuite {
     ((i * 2654435761L) % 60, (i * 40503L + 7) % 60)
   }.filter(p => p._1 != p._2): _*)
   private lazy val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+  // directed rows: node 0 has no in-row and 4 no out-row, so the rank
+  // and label node sets shrink round by round
+  private lazy val dag = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L))
+    .toDF("src", "dst")
 
   // a chain with shortcuts: later rounds improve earlier distances, so
   // a round that read distances written in the same round would reach
@@ -172,5 +192,38 @@ class LocalFinishSpec extends AnyFunSuite {
     assert(rows(local) === rows(Dedup.dupClusters(pairs, smallGraphEdges = 0)))
     val ints = pairs.select(col("a_id").cast("int"), col("b_id").cast("int"))
     assert(rows(Dedup.dupClusters(ints)) === rows(local))
+  }
+
+  test("pagerank and personalizedPagerank: local ≡ distributed within 1e-12 per node") {
+    for ((gName, g) <- Seq("k4multi" -> k4multi, "sparse" -> sparse, "dag" -> dag,
+        "empty" -> empty); iters <- Seq(0, 3))
+      rankLaw(s"pagerank iters=$iters on $gName", g)(Graph.pagerankRanks(g, iters, 0.85))
+    rankLaw("pagerank iters=1 on dag", dag)(Graph.pagerankRanks(dag, 1, 0.85))
+    val seeds = Seq(
+      "one seed" -> Seq(0L),
+      "repeated seeds" -> Seq(4L, 0L, 4L),
+      "a seed without edges" -> Seq(0L, 99L),
+      "no seed" -> Nil)
+    for ((gName, g) <- Seq("k4multi" -> k4multi, "dag" -> dag); (sName, s) <- seeds;
+         iters <- Seq(0, 3))
+      rankLaw(s"ppr iters=$iters, $sName, on $gName", g)(
+        Graph.personalizedPagerankRanks(g, s.toDF("node"), iters, 0.85))
+    rankLaw("ppr on empty edges", empty)(
+      Graph.personalizedPagerankRanks(empty, Seq(3L).toDF("node"), 2, 0.85))
+    // the seed with no edges keeps its restart mass; no seed, no rows
+    assert(Graph.personalizedPagerank(k4chain, Seq(0L, 99L).toDF("node")).collect()
+      .exists(r => r.getLong(0) == 99L && r.getDouble(1) == 0.075))
+    assert(Graph.personalizedPagerank(k4chain, Seq.empty[Long].toDF("node")).isEmpty)
+  }
+
+  test("labelPropagation: local ≡ distributed, frequency ties going to the smallest label") {
+    for ((gName, g) <- Seq("k4multi" -> k4multi, "sparse" -> sparse, "dag" -> dag,
+        "empty" -> empty); iters <- Seq(0, 3))
+      law(s"labelPropagation iters=$iters on $gName", g)(Graph.labelPropagation(g, iters))
+    // node 5 hears labels 1 and 2 once each, and 1 and 2 hear 5
+    val fork = sym((5L, 1L), (5L, 2L))
+    law("labelPropagation tie", fork)(Graph.labelPropagation(fork, 1))
+    assert(Graph.labelPropagation(fork, 1).collect().map(r => r.getLong(0) -> r.getLong(1))
+      .toMap === Map(5L -> 1L, 1L -> 5L, 2L -> 5L))
   }
 }

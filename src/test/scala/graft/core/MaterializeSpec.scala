@@ -109,8 +109,8 @@ class MaterializeSpec extends AnyFunSuite {
     val embs = (0L until 120L).map(i =>
       (i, Array.tabulate(8)(d => math.sin(i * 0.37 + d).toFloat))).toDF("vec_id", "embedding")
 
-    // SSSP and BFS on their distributed loops (the checkpointed rounds
-    // are what this law covers), at the graph's node count
+    // SSSP, BFS and label propagation on their distributed loops (the
+    // checkpointed rounds are what this law covers), at the graph's node count
     val nodes = sym.select("src").distinct().count()
     def loops[A](body: => A): A = SparkTestSession.distributedLoops(spark, nodes)(body)
     def run() = (
@@ -123,8 +123,8 @@ class MaterializeSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
       loops(Graph.bfsDistances(sym, source, maxDepth = 4).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq),
-      Graph.labelPropagation(sym, iters = 6, materializeEvery = 2).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+      loops(Graph.labelPropagation(sym, iters = 6, materializeEvery = 2).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq))
 
     val local = run()
     val reliable = withReliable(run())
